@@ -282,9 +282,7 @@ class Engine:
         shingle_n: int = 3,
         num_hashes: int = 8,
         band_rows: int = 1,
-        decontaminate_broadcast: bool | None = None,
         stage_dir: str | None = None,
-        staged: bool = True,
     ) -> DataFrame:
         """The end-to-end pretraining-corpus pipeline on the caller's
         own documents (operators/pipeline.py; the composition is
@@ -297,30 +295,22 @@ class Engine:
         packing -> deterministic hash split. Returns (id, n_tokens,
         bin_id, bucket, split).
 
-        STAGED BY DEFAULT (VERDICT r10 #2): the cleaned corpus is sunk
-        to parquet after stage 3 and re-read — measured 2.7× faster
-        than the declarative chain at sf0.1 (SCALE.md r10: durable
-        beat both lineage re-derivation and in-memory persist at every
-        measured SF) and the restartable shape a multi-TB dedup prefix
-        needs. ``stage_dir`` picks the boundary path (default: a
-        per-application scratch dir); ``staged=False`` restores the
-        pure-lineage form, value-identical by the shared oracle.
+        ALWAYS STAGED (VERDICT r10 #2): the cleaned corpus is sunk to
+        parquet after stage 3 and re-read — measured 2.7× faster than
+        the declarative chain at sf0.1 (SCALE.md r10: durable beat both
+        lineage re-derivation and in-memory persist at every measured
+        SF) and the restartable shape a multi-TB dedup prefix needs.
+        ``stage_dir`` picks the boundary path (default: a fresh
+        per-call scratch dir).
 
         (shingle_n, num_hashes, band_rows) is the near-dup LSH
-        geometry — pass (3, 16, 2) at scale; decontaminate_broadcast
-        switches the probe-gram join between broadcast and shuffle
-        (None = size-based)."""
+        geometry — pass (3, 16, 2) at scale. The probe-gram join
+        broadcasts or shuffles by probe size (operators/pipeline.py
+        decontaminate)."""
         from fairy_spark.operators.pipeline import pretrain_corpus
 
-        if staged and stage_dir is None:
+        if stage_dir is None:
             stage_dir = self._pipeline_stage_dir(docs)
-        elif not staged and stage_dir is not None:
-            # Previously the explicit dir was silently discarded
-            # (ADVICE r11) — the combination is contradictory, reject.
-            raise ValueError(
-                "stage_dir is only meaningful with staged=True; "
-                f"got staged=False with stage_dir={stage_dir!r}"
-            )
         return pretrain_corpus(
             docs,
             probe_docs=probe_docs,
@@ -331,7 +321,6 @@ class Engine:
             shingle_n=shingle_n,
             num_hashes=num_hashes,
             band_rows=band_rows,
-            decontaminate_broadcast=decontaminate_broadcast,
             stage_dir=stage_dir,
         )
 

@@ -161,7 +161,7 @@ def _shingled_sig_arrow(
     yield [] shingles and all-null signatures exactly like array_min
     over nothing — and gated by an equality test against the HOF
     form."""
-    assert num_hashes <= 17, "60-bit windows beyond hex offset 16 leave the digest"
+    assert num_hashes <= 18, "60-bit windows beyond hex offset 17 leave the digest"
     import pandas as pd
 
     def gen(batches):

@@ -1,16 +1,16 @@
 """End-to-end pretraining-corpus pipeline over ARBITRARY document
 DataFrames.
 
-Extracted from the registered query `pipeline_pretrain_corpus`
-(fairy_spark/queries/llm.py) the same way operators/wedges.py was
-extracted from the triangle queries: the registered row hardwires the
-testdata `documents` table and the doc_id%97 benchmark stand-in; this
-operator takes any (id, text) DataFrame and an optional caller probe
+The single implementation of the curation chain. The four registered
+`pipeline_pretrain_corpus*` rows (fairy_spark/queries/llm.py) are each
+one call to ``pretrain_corpus`` over the testdata `documents` table
+with the doc_id%97 benchmark stand-in as the probe set; the operator
+itself takes any (id, text) DataFrame and an optional caller probe
 set, so a user runs the proven chain on their own corpus —
 Engine.pretrain_corpus is the API handle.
 
 Stages (each individually registered + oracle-proven; the registered
-composed query proves the composition):
+composed rows prove the composition):
 
   1. Gopher quality rules (Rae et al. 2021 §A1.1)
   2. exact dedup — lowest id per distinct text
@@ -358,7 +358,8 @@ def pretrain_corpus(
     ``(shingle_n, num_hashes, band_rows)`` is the near-dup LSH
     geometry (see near_dup_removed — pass (3, 16, 2) at scale);
     ``decontaminate_broadcast`` is decontaminate's broadcast switch
-    (None = size-based).
+    (None = size-based; the registered rows pin True, Engine uses
+    None).
 
     ``stage_dir``: when set, the stage-3 output (the cleaned corpus)
     is SUNK to parquet at that path and re-read before stages 4-6 —
@@ -368,7 +369,8 @@ def pretrain_corpus(
     lineage suffix re-derived per action. Value-identical to the
     declarative form by construction (the same rows cross the
     boundary; asserted in tests/test_pipeline_operator.py and pinned
-    against the registered oracle by `pipeline_pretrain_corpus_staged`)."""
+    against the same oracle by the `_staged` and `_staged_scale`
+    registered rows, which are this call with a stage dir)."""
 
     q3 = _cleaned_corpus(
         docs,

@@ -27,9 +27,10 @@ from lineage; checkpointed frames drop the reference and the
 ContextCleaner reclaims their blocks after GC). Trade-off at 100 TB:
 localCheckpoint forfeits lineage-based recovery of the materialized
 stage (an executor loss invalidates the frame) — the production shape
-for a multi-TB boundary is the durable parquet stage
-(`pipeline_pretrain_corpus_staged`), which the declarative form's
-in-memory boundary deliberately mirrors.
+for a multi-TB boundary is the durable parquet stage (``stage_dir`` of
+operators/pipeline.py pretrain_corpus, which Engine.pretrain_corpus
+always sets), and the unstaged form's in-memory boundary deliberately
+mirrors it.
 
 This is NOT cross-run result caching: every query invocation
 materializes its OWN freshly-built frame (nothing is keyed on the

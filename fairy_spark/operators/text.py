@@ -59,12 +59,13 @@ def minhash_signature(shingles: Column, num_hashes: int = 8) -> Column:
     """Array of num_hashes min-hash values over the shingle set.
 
     One md5 per shingle; hash i reads the 15-hex-char window starting
-    at offset i of the digest (num_hashes <= 17 windows fit in 32 hex
-    chars) — 8x cheaper than seeded re-hashing, still deterministic
-    (SURVEY.md §7.5 forbids builtin hash()) and exactly reproducible
-    in SQL: h_i(s) = CAST(concat('0x', substr(md5(s), 1+i, 15)) AS BIGINT).
+    at offset i of the digest (offsets 0..17, so num_hashes <= 18
+    windows fit in 32 hex chars) — 8x cheaper than seeded re-hashing,
+    still deterministic (SURVEY.md §7.5 forbids builtin hash()) and
+    exactly reproducible in SQL:
+    h_i(s) = CAST(concat('0x', substr(md5(s), 1+i, 15)) AS BIGINT).
     """
-    assert num_hashes <= 17
+    assert num_hashes <= 18
     # Expression structure matters: referencing a shared `hexes`
     # sub-expression from num_hashes separate array_min's duplicates
     # the md5 transform num_hashes times in the plan (Catalyst does not

@@ -37,6 +37,7 @@ from fairy_spark.operators.text import (
 from fairy_spark.queries import register
 from fairy_spark.sources.tables import load_table
 from fairy_spark.operators.pool import park_persisted
+from fairy_spark.operators.pipeline import gopher_keep_col, pretrain_corpus
 
 # DuckDB fragments mirroring operators/text.py
 _TOKS_SQL = "string_split_regex(lower(text), '\\s+')"
@@ -3064,7 +3065,9 @@ def text_gopher_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass applies before dedup. One scan, all signals from one
     tokenize; pure JVM higher-order functions (no Python), so the
     whole row fits in one WholeStageCodegen span and scales as a
-    narrow map over document splits."""
+    narrow map over document splits. The keep verdict is
+    operators/pipeline.py gopher_keep_col, the predicate the curation
+    pipeline filters on."""
     d = load_table(spark, sf_dir, "documents")
     toks = tokenize(F.col("text"))
     base = d.select(
@@ -3076,12 +3079,7 @@ def text_gopher_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.size(toks)
         ).alias("ar"),
         F.size(F.filter(toks, lambda t: t.isin(*EN_STOPWORDS))).alias("stop_hits"),
-    )
-    keep = (
-        F.col("n_words").between(30, 10000)
-        & F.col("mwl").between(3, 10)
-        & (F.col("ar") >= 0.8)
-        & (F.col("stop_hits") >= 2)
+        gopher_keep_col("text").alias("keep"),
     )
     return base.select(
         "doc_id",
@@ -3089,7 +3087,7 @@ def text_gopher_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("mwl", 6).alias("mean_word_len"),
         F.round("ar", 6).alias("alpha_ratio"),
         "stop_hits",
-        keep.alias("keep"),
+        "keep",
     ).orderBy("doc_id")
 
 
@@ -3345,95 +3343,6 @@ def _pipeline_oracle(num_hashes: int, band_rows: int) -> str:
 _PIPELINE_ORACLE = _pipeline_oracle(8, 1)
 
 
-def _pipeline_pretrain(
-    spark: SparkSession,
-    sf_dir: str,
-    num_hashes: int = 8,
-    band_rows: int = 1,
-    stage_dir: str | None = None,
-) -> DataFrame:
-    """Shared body of the three registered pipeline rows — the six
-    proven stages at a caller-chosen LSH geometry, optionally with the
-    stage-3 parquet boundary (operators/pipeline.py pretrain_corpus's
-    ``stage_dir``). The probe-gram join keeps the explicit broadcast
-    hint: the registered probe set (doc_id%97) is benchmark-sized by
-    construction, and pinning the hint keeps the registered plan
-    independent of the operator's size-probe count job (the size-based
-    default is unit-tested in tests/test_pipeline_operator.py)."""
-    from fairy_spark.operators.packing import pack_into_bins
-    from fairy_spark.operators.pipeline import (
-        decontaminate,
-        gopher_quality_filter,
-        near_dup_removed,
-    )
-
-    d = load_table(spark, sf_dir, "documents")
-
-    # stages 1-3 over the FULL corpus (probe rows participate in
-    # quality + dedup, exactly as a benchmark leak would in the wild)
-    q1 = gopher_quality_filter(d).select("doc_id", "text", "n_chars")
-    canonical = (
-        q1.withColumn("_h", F.sha2(F.col("text"), 256))
-        .groupBy("_h")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    # r14 optimization (guide §1.2 step 1 / §5): materialize the
-    # exact-dedup output ONCE. q2 feeds three branches of stage 3 (the
-    # signature-index build, the survivor-length join, the final
-    # anti-join); each branch re-ran the Gopher tokenize scan + sha2
-    # agg + semi-join without this boundary — measured 94 s → the
-    # staged shape's ~20 s at sf0.1 came almost entirely from this
-    # class of re-evaluation.
-    q2 = park_persisted(
-        "pipeline", q1.join(canonical, "doc_id", "left_semi"), checkpoint=True
-    )
-    q3 = near_dup_removed(
-        q2, threshold=0.4, num_hashes=num_hashes, band_rows=band_rows
-    )
-
-    # optional durable boundary: sink the cleaned corpus, re-read it
-    if stage_dir is not None:
-        q3.write.mode("overwrite").parquet(stage_dir)
-        q3 = spark.read.parquet(stage_dir)
-    else:
-        # declarative form: the same boundary, in the block-manager
-        # instead of parquet — stage 4 consumes q3 twice (gram explode
-        # + anti-join) and stage 5's eager prefix-sum passes re-derive
-        # everything below them per action without it.
-        q3 = park_persisted("pipeline", q3, checkpoint=True)
-
-    # stage 4: the doc_id%97==0 stand-in is the probe set; the corpus
-    # drops the probe rows themselves, then everything sharing a gram
-    probe = d.filter(F.col("doc_id") % 97 == 0)
-    q4 = decontaminate(
-        q3.filter(F.col("doc_id") % 97 != 0), probe, broadcast=True
-    ).select("doc_id", F.size(tokenize(F.col("text"))).alias("n_tokens"))
-    # slim (doc_id, n_tokens) boundary: pack_into_bins evaluates its
-    # input three times (bounds agg, per-shard subtotals, final
-    # windowed plan) — park the two-column frame so those passes never
-    # re-run stage 4's gram explode + semi-join (guide §2.3: decide on
-    # lightweight proxies, §8's "move heavy bytes once" in miniature).
-    q4 = park_persisted("pipeline", q4, checkpoint=True)
-
-    # stage 5: 512-token greedy packing (sharded two-pass prefix sum)
-    packed = pack_into_bins(q4, "doc_id", "n_tokens", bin_tokens=512)
-
-    # stage 6: deterministic hash split
-    bucket = (
-        portable_hash64(F.col("doc_id").cast("string"), seed="split") % 100
-    ).alias("bucket")
-    out = packed.select("doc_id", "n_tokens", "bin_id", bucket)
-    split = (
-        F.when(F.col("bucket") < 80, F.lit("train"))
-        .when(F.col("bucket") < 90, F.lit("valid"))
-        .otherwise(F.lit("test"))
-    )
-    return out.select(
-        "doc_id", "n_tokens", "bin_id", "bucket", split.alias("split")
-    ).orderBy("doc_id")
-
-
 @register("pipeline_pretrain_corpus", oracle=_PIPELINE_ORACLE)
 def pipeline_pretrain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END pretraining-corpus pipeline (VERDICT r8 #5) — the
@@ -3462,8 +3371,24 @@ def pipeline_pretrain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     (probe sets are benchmark-sized); stage 5 shards the prefix sum;
     stage 6 is a narrow map. No stage introduces a cartesian product
     or a single-partition window — asserted registry-wide in
-    tests/test_plans.py, which is the gate VERDICT r8 #5 names."""
-    return _pipeline_pretrain(spark, sf_dir, num_hashes=8, band_rows=1)
+    tests/test_plans.py, which is the gate VERDICT r8 #5 names.
+
+    All four pipeline rows are one call to
+    operators/pipeline.py pretrain_corpus. The probe rows take part in
+    stages 1-3 like any other doc; stage 4 then drops them with the
+    rest of the contaminated docs (a probe row that survives Gopher
+    has >= 30 tokens, so all of its >= 23 8-grams are probe grams).
+    The probe join pins ``decontaminate_broadcast=True``: the probe set
+    is benchmark-sized by construction, and the pin keeps the plan free
+    of the operator's size-probe count job."""
+    d = load_table(spark, sf_dir, "documents")
+    return pretrain_corpus(
+        d.select("doc_id", "text", "n_chars"),
+        probe_docs=d.filter(F.col("doc_id") % 97 == 0),
+        num_hashes=8,
+        band_rows=1,
+        decontaminate_broadcast=True,
+    ).orderBy("doc_id")
 
 
 @register("pipeline_pretrain_corpus_scale", oracle=_pipeline_oracle(16, 2))
@@ -3482,7 +3407,14 @@ def pipeline_pretrain_corpus_scale(spark: SparkSession, sf_dir: str) -> DataFram
     flows through operators/pipeline.py near_dup_removed's (shingle_n,
     num_hashes, band_rows) params — the same user-facing knobs
     Engine.pretrain_corpus exposes."""
-    return _pipeline_pretrain(spark, sf_dir, num_hashes=16, band_rows=2)
+    d = load_table(spark, sf_dir, "documents")
+    return pretrain_corpus(
+        d.select("doc_id", "text", "n_chars"),
+        probe_docs=d.filter(F.col("doc_id") % 97 == 0),
+        num_hashes=16,
+        band_rows=2,
+        decontaminate_broadcast=True,
+    ).orderBy("doc_id")
 
 
 @register("pipeline_pretrain_corpus_staged", oracle=_PIPELINE_ORACLE)
@@ -3504,10 +3436,15 @@ def pipeline_pretrain_corpus_staged(spark: SparkSession, sf_dir: str) -> DataFra
     expensive relative to a parquet round-trip."""
     from fairy_spark.queries.sources_io import _scratch
 
-    stage_dir = _scratch(spark, sf_dir, "pipeline_stage3")
-    return _pipeline_pretrain(
-        spark, sf_dir, num_hashes=8, band_rows=1, stage_dir=stage_dir
-    )
+    d = load_table(spark, sf_dir, "documents")
+    return pretrain_corpus(
+        d.select("doc_id", "text", "n_chars"),
+        probe_docs=d.filter(F.col("doc_id") % 97 == 0),
+        num_hashes=8,
+        band_rows=1,
+        decontaminate_broadcast=True,
+        stage_dir=_scratch(spark, sf_dir, "pipeline_stage3"),
+    ).orderBy("doc_id")
 
 
 @register("pipeline_pretrain_corpus_staged_scale", oracle=_pipeline_oracle(16, 2))
@@ -3518,8 +3455,8 @@ def pipeline_pretrain_corpus_staged_scale(spark: SparkSession, sf_dir: str) -> D
     suppression, 94% recall; SCALE.md) AND the durable stage-3 parquet
     boundary (measured 2.7× faster than the declarative chain at
     sf0.1, and the restartable execution shape a multi-TB dedup prefix
-    needs). This is what `Engine.pretrain_corpus` now runs BY DEFAULT
-    (staged=True; geometry still caller-chosen) — so the default path
+    needs). This is what `Engine.pretrain_corpus` always runs
+    (geometry caller-chosen) — so the default path
     a user actually executes is itself oracle-pinned: checked against
     the SAME (16,2) oracle as `pipeline_pretrain_corpus_scale`, which
     proves the boundary flip value-identical at the production
@@ -3527,10 +3464,15 @@ def pipeline_pretrain_corpus_staged_scale(spark: SparkSession, sf_dir: str) -> D
     `pipeline_pretrain_corpus_staged` pins."""
     from fairy_spark.queries.sources_io import _scratch
 
-    stage_dir = _scratch(spark, sf_dir, "pipeline_stage3_scale")
-    return _pipeline_pretrain(
-        spark, sf_dir, num_hashes=16, band_rows=2, stage_dir=stage_dir
-    )
+    d = load_table(spark, sf_dir, "documents")
+    return pretrain_corpus(
+        d.select("doc_id", "text", "n_chars"),
+        probe_docs=d.filter(F.col("doc_id") % 97 == 0),
+        num_hashes=16,
+        band_rows=2,
+        decontaminate_broadcast=True,
+        stage_dir=_scratch(spark, sf_dir, "pipeline_stage3_scale"),
+    ).orderBy("doc_id")
 
 
 # Previous call's persisted vocab-stats frame (unpersisted on the next

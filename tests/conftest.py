@@ -49,3 +49,21 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def sf_small():
     return SF_SMALL
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Name the parity gate when the default ``-m "not parity"`` left it
+    out, so a green default run is not mistaken for the full gate."""
+    if "not parity" not in terminalreporter.config.getoption("markexpr"):
+        return
+    n = sum(
+        1
+        for item in terminalreporter.stats.get("deselected", ())
+        if item.get_closest_marker("parity")
+    )
+    if n:
+        terminalreporter.write_sep("-", "parity gate not run", yellow=True)
+        terminalreporter.write_line(
+            f"{n} parity items deselected; run them with: "
+            "python -m pytest tests/ -q -m parity"
+        )

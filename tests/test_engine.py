@@ -156,28 +156,42 @@ def test_engine_cdc_fingerprints_source_report(spark, sf_dir):
     assert rep == reg
 
 
+def test_pretrain_corpus_facade_matches_production_row(engine, spark, sf_dir):
+    """The façade and the registered production row are one call to
+    operators/pipeline.py pretrain_corpus: on the same documents, probe
+    set and (16,2) geometry they give the same rows."""
+    from fairy_spark.queries import QUERIES
+
+    d = load_table(spark, sf_dir, "documents")
+    got = engine.pretrain_corpus(
+        d.select("doc_id", "text", "n_chars"),
+        probe_docs=d.filter(F.col("doc_id") % 97 == 0),
+        num_hashes=16,
+        band_rows=2,
+    ).orderBy("doc_id").collect()
+    reg = QUERIES["pipeline_pretrain_corpus_staged_scale"](spark, sf_dir).collect()
+    assert got and got == reg
+
+
 def test_pretrain_corpus_staged_default_matches_lineage_form(engine, spark, sf_dir):
-    """VERDICT r10 #2: the facade stages by default (a durable parquet
-    boundary after stage 3) and is value-identical to staged=False;
-    consecutive calls get distinct boundary dirs (no clobber)."""
+    """VERDICT r10 #2: the facade always stages (a durable parquet
+    boundary after stage 3); consecutive calls get distinct boundary
+    dirs (no clobber). Staged == lineage values are pinned by
+    test_pipeline_operator.py and the `_scale`/`_staged_scale` oracle
+    pair."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    staged = engine.pretrain_corpus(docs).orderBy("doc_id").collect()
-    pure = engine.pretrain_corpus(docs, staged=False).orderBy("doc_id").collect()
-    assert staged and staged == pure
+    assert engine.pretrain_corpus(docs).collect()
     d1 = engine._pipeline_stage_dir(docs)
     d2 = engine._pipeline_stage_dir(docs)
     assert d1 != d2
 
 
 def test_pretrain_corpus_stage_dir_guard_and_cleanup(engine, spark, sf_dir):
-    """ADVICE r11: staged=False with an explicit stage_dir is a
-    contradiction and raises (it used to be silently discarded);
-    cleanup_stage_dirs removes every facade-minted boundary dir."""
+    """ADVICE r11: cleanup_stage_dirs removes every facade-minted
+    boundary dir."""
     import os
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    with pytest.raises(ValueError, match="staged=True"):
-        engine.pretrain_corpus(docs, staged=False, stage_dir="/tmp/never_used")
     engine.cleanup_stage_dirs()  # drop dirs left by earlier tests
     engine.pretrain_corpus(docs).count()
     assert len(engine._stage_dirs) == 1

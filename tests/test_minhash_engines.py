@@ -12,6 +12,7 @@ unchanged from the r1-r4 HOF era (the DuckDB oracle pins that too).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row, functions as F
 
 from fairy_spark.operators.dedup import _shingled_sig_arrow, _shingled_sig_hof
@@ -27,10 +28,13 @@ def _rows(df):
     }
 
 
-def test_sig_builders_equal_on_testdata(spark):
+@pytest.mark.parametrize("num_hashes", [8, 18])
+def test_sig_builders_equal_on_testdata(spark, num_hashes):
+    """18 is the widest setting: window offset 17 still reads a full 15
+    hex chars (chars 18-32 of the digest), and both engines accept it."""
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    a = _rows(_shingled_sig_arrow(docs, "doc_id", "text", 3, 8, []))
-    h = _rows(_shingled_sig_hof(docs, "doc_id", "text", 3, 8, []))
+    a = _rows(_shingled_sig_arrow(docs, "doc_id", "text", 3, num_hashes, []))
+    h = _rows(_shingled_sig_hof(docs, "doc_id", "text", 3, num_hashes, []))
     assert a == h and len(a) > 0
 
 
