@@ -24,9 +24,16 @@ Spark-native design — an LSM-flavored bucketed table, not a file per key:
     and unusable at scale). Latest ``seq`` wins on read; deletes are
     tombstones (null value). ``compact()`` folds the log down to one
     row per live key.
-  * ``get`` is a key-equality filter: Catalyst prunes to one bucket,
-    parquet min/max on the sorted key column prunes row groups inside
-    it.
+  * ``get``/``exists``/``multi_get`` run no Spark job when the table
+    lives on the local file system: like the reference, they hash the
+    key (Spark's murmur3, :func:`bucket_id`), open only the parquet
+    files whose names carry that bucket id, filter them on the key
+    with pyarrow, and let the highest ``seq`` win. The table's
+    location and fanout come from the catalog, and the bucket -> files
+    listing is cached per process (:class:`_Listing`). Other locations
+    (``hdfs://``, ``s3a://``, ...) take the Spark query
+    (:meth:`KVStore._get_spark`), whose key filter prunes the scan to
+    the same bucket files.
 
 This trades a little read-side work (max-seq resolution) for scalable
 writes — the same LSM trade-off every real KV store at this scale makes.
@@ -34,6 +41,15 @@ writes — the same LSM trade-off every real KV store at this scale makes.
 
 from __future__ import annotations
 
+import os
+import re
+import time
+from typing import Iterable, NamedTuple
+from urllib.parse import unquote, urlparse
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Row, SparkSession, functions as F
 from pyspark.sql import types as T
 
@@ -49,6 +65,121 @@ KV_SCHEMA = T.StructType(
 class KeyNotFound(KeyError):
     """Raised on get() of a missing/deleted key (reference: io::Error
     from File::open, local_file_kv_store.rs:51)."""
+
+
+_M32 = 0xFFFFFFFF
+
+
+def _rotl32(x: int, r: int) -> int:
+    return ((x << r) | (x >> (32 - r))) & _M32
+
+
+def _mix(h1: int, k1: int) -> int:
+    k1 = _rotl32((k1 * 0xCC9E2D51) & _M32, 15) * 0x1B873593 & _M32
+    return (_rotl32(h1 ^ k1, 13) * 5 + 0xE6546B64) & _M32
+
+
+def _murmur3_x86_32(data: bytes, seed: int = 42) -> int:
+    """Spark's ``Murmur3_x86_32.hashUnsafeBytes`` (the ``hash()`` of a
+    string column): little-endian 4-byte blocks, then each tail byte
+    sign-extended and mixed on its own — not the reference murmur3
+    tail. Returns the signed 32-bit value ``F.hash`` gives."""
+    h1, n = seed, len(data)
+    aligned = n - n % 4
+    for i in range(0, aligned, 4):
+        h1 = _mix(h1, int.from_bytes(data[i : i + 4], "little"))
+    for b in data[aligned:]:
+        h1 = _mix(h1, (b - 256 if b > 127 else b) & _M32)
+    h1 ^= n
+    h1 = ((h1 ^ (h1 >> 16)) * 0x85EBCA6B) & _M32
+    h1 = ((h1 ^ (h1 >> 13)) * 0xC2B2AE35) & _M32
+    h1 ^= h1 >> 16
+    return h1 - (1 << 32) if h1 & 0x80000000 else h1
+
+
+def bucket_id(key: str, num_buckets: int) -> int:
+    """The bucket ``bucketBy(num_buckets, "key")`` writes ``key`` to:
+    ``pmod(hash(key), num_buckets)``, computed without Spark."""
+    return _murmur3_x86_32(key.encode("utf-8")) % num_buckets
+
+
+# KV_SCHEMA as pyarrow reads it; passing it spares opening a file to
+# infer it.
+_ARROW_SCHEMA = pa.schema(
+    [("key", pa.string()), ("value", pa.binary()), ("seq", pa.int64())]
+)
+# A bucketed table's data file names end in their bucket id
+# (part-00000-<uuid>_00042.c000.snappy.parquet), as BucketingUtils
+# parses them.
+_BUCKET_FILE = re.compile(r"_(\d+)(?:\..*)?$")
+# A directory stamp this recent may share its mtime tick with a write
+# that is still landing, so its listing is not trusted for the next read.
+_SETTLE_NS = 100_000_000
+
+
+class _Listing(NamedTuple):
+    """A table's data files as last listed. ``path`` is the local
+    directory, or None when the catalog location is not local (reads
+    take the Spark path). ``stamp`` is the directory's (st_ino,
+    st_mtime_ns) when listed, or None to re-list on the next read.
+    ``files[b]`` holds bucket ``b``'s files, so ``len(files)`` is the
+    catalog's fanout."""
+
+    path: str | None
+    stamp: tuple[int, int] | None
+    files: tuple[tuple[str, ...], ...]
+
+
+# Table name -> _Listing, shared by every handle in the process. An
+# entry is only ever replaced whole or popped (by each commit), so
+# serving threads read it without a lock.
+_LISTINGS: dict[str, _Listing] = {}
+
+
+def _dir_stamp(path: str) -> tuple[int, int] | None:
+    try:
+        st = os.stat(path)
+    except FileNotFoundError:
+        return None
+    return st.st_ino, st.st_mtime_ns
+
+
+def _list_buckets(path: str, num_buckets: int) -> _Listing:
+    st = os.stat(path)
+    files: list[list[str]] = [[] for _ in range(num_buckets)]
+    for name in os.listdir(path):
+        if name.startswith(("_", ".")):  # _SUCCESS, _temporary, .crc
+            continue
+        m = _BUCKET_FILE.search(name)
+        if m is None or int(m.group(1)) >= num_buckets:
+            raise RuntimeError(
+                f"{os.path.join(path, name)} is not a data file of a "
+                f"{num_buckets}-bucket table"
+            )
+        files[int(m.group(1))].append(os.path.join(path, name))
+    settled = time.time_ns() - st.st_mtime_ns >= _SETTLE_NS
+    stamp = (st.st_ino, st.st_mtime_ns) if settled else None
+    return _Listing(path, stamp, tuple(map(tuple, files)))
+
+
+def _live(rows: Iterable[tuple[str, bytes | None, int]]) -> dict[str, bytes]:
+    """Latest ``seq`` wins per key; tombstoned (null) keys are dropped."""
+    best: dict[str, tuple[int, bytes | None]] = {}
+    for key, value, seq in rows:
+        if key not in best or seq > best[key][0]:
+            best[key] = (seq, value)
+    return {k: bytes(v) for k, (_, v) in best.items() if v is not None}
+
+
+def _read_buckets(listing: _Listing, keys: list[str]) -> dict[str, bytes]:
+    """Direct read: the parquet files of the keys' buckets, each read
+    once in one pyarrow call with an In filter on the key."""
+    n = len(listing.files)
+    files = [f for b in {bucket_id(k, n) for k in keys} for f in listing.files[b]]
+    if not files:
+        return {}
+    t = pq.read_table(files, schema=_ARROW_SCHEMA, filters=[("key", "in", keys)])
+    return _live(zip(*(t.column(c).to_pylist() for c in _ARROW_SCHEMA.names)))
 
 
 class KVStore:
@@ -187,7 +318,10 @@ class KVStore:
         )
         if self.location is not None:
             w = w.option("path", self.location)
-        w.saveAsTable(self.table)
+        try:
+            w.saveAsTable(self.table)
+        finally:
+            _LISTINGS.pop(self.table, None)
 
     def _append(self, rows: list[Row]) -> None:
         self._append_df(self.spark.createDataFrame(rows, KV_SCHEMA))
@@ -238,43 +372,88 @@ class KVStore:
         )
         self._append_df(rows)
 
+    def _catalog_info(self) -> dict[str, str]:
+        """The live table's DESCRIBE TABLE EXTENDED rows as
+        {col_name: data_type} ('Location', 'Num Buckets', ...); empty
+        when the table does not exist."""
+        if not self._exists_table():
+            return {}
+        try:
+            rows = self.spark.sql(f"DESCRIBE TABLE EXTENDED {self.table}").collect()
+        except AnalysisException:  # dropped or renamed away since the check
+            return {}
+        return {r["col_name"]: r["data_type"] for r in rows}
+
+    def _listing(self, fresh: bool = False) -> _Listing | None:
+        """The live table's bucket -> files map (None: no table). The
+        shared entry is reused while the directory's stamp is unchanged,
+        so writers in other processes are noticed too; otherwise the
+        location and fanout are re-read from the catalog, never taken
+        from this handle's ``num_buckets``."""
+        entry = _LISTINGS.get(self.table)
+        if entry is not None and not fresh and (
+            entry.path is None
+            or (entry.stamp is not None and entry.stamp == _dir_stamp(entry.path))
+        ):
+            return entry
+        info = self._catalog_info()
+        if not info:
+            return None
+        loc = urlparse(info["Location"])
+        if loc.scheme in ("", "file"):
+            entry = _list_buckets(unquote(loc.path), int(info["Num Buckets"]))
+        else:
+            entry = _Listing(None, None, ())
+        _LISTINGS[self.table] = entry
+        return entry
+
+    def _read(self, listing: _Listing | None, keys: list[str]) -> dict[str, bytes]:
+        if listing is None:
+            return {}
+        if listing.path is None:
+            return self._get_spark(keys)
+        return _read_buckets(listing, keys)
+
+    def _lookup(self, keys: list[str]) -> dict[str, bytes]:
+        """Live values of ``keys`` (missing and tombstoned keys are
+        absent) — the one read path of get, exists and multi_get."""
+        try:
+            return self._read(self._listing(), keys)
+        except FileNotFoundError:
+            # A compaction swap removed listed files: re-list once. A
+            # second miss means the layout is still moving, so it raises.
+            return self._read(self._listing(fresh=True), keys)
+
+    def _get_spark(self, keys: list[str]) -> dict[str, bytes]:
+        """The Spark-job lookup, for locations that are not local
+        (``hdfs://``, ``s3a://``, ...): one In filter on the key, which
+        prunes the scan to the probed keys' bucket files, then the same
+        latest-seq resolution as the direct read."""
+        rows = self._log().filter(F.col("key").isin(keys)).select("key", "value", "seq")
+        return _live(rows.collect())
+
     def get(self, key: str) -> bytes:
-        # Key-equality filter → bucket pruning + row-group pruning; only
-        # then resolve latest seq over the (tiny) per-key history.
-        hits = (
-            self._log()
-            .filter(F.col("key") == key)
-            .orderBy(F.col("seq").desc())
-            .limit(1)
-            .collect()
-        )
-        if not hits or hits[0]["value"] is None:
+        """The value of ``key``; KeyNotFound when it is missing or
+        deleted. A local store hashes the key and reads only that
+        bucket's parquet files, with no Spark job — the reference's
+        hash-then-open-one-file read (local_file_kv_store.rs:49-70)."""
+        value = self._lookup([key]).get(key)
+        if value is None:
             raise KeyNotFound(key)
-        return bytes(hits[0]["value"])
+        return value
 
     def multi_get(self, keys: list[str]) -> dict[str, bytes]:
         """Batched point lookups — the reference get path
         (local_file_kv_store.rs:49-60) generalized to a key set
         (`kv_multi_get` pins the relational shape against its oracle).
-        ONE scan serves the whole batch: the key list compiles to a
-        single In filter pushed to the scan, so bucket pruning and
-        row-group stats are paid once per batch instead of once per
-        key (B separate get() calls = B scans). Latest-seq resolution
-        is the same max_by hash agg as _latest(), restricted to the
-        probed keys. Missing and tombstoned keys are simply absent
-        from the result (no KeyNotFound — a batch caller checks
-        membership). The collect is bounded by |keys|."""
+        The keys are grouped by bucket and each bucket's files are read
+        once with an In filter on the key, so B keys cost at most
+        min(B, num_buckets) file reads and no Spark job. Missing and
+        tombstoned keys are simply absent from the result (no
+        KeyNotFound — a batch caller checks membership)."""
         if not keys:
             return {}
-        rows = (
-            self._log()
-            .filter(F.col("key").isin(list(keys)))
-            .groupBy("key")
-            .agg(F.max_by("value", "seq").alias("value"))
-            .filter(F.col("value").isNotNull())
-            .collect()
-        )
-        return {r["key"]: bytes(r["value"]) for r in rows}
+        return self._lookup(keys)
 
     def get_df(self, keys: DataFrame) -> DataFrame:
         """Batch get: join a (key) DataFrame against the store.
@@ -379,14 +558,7 @@ class KVStore:
         return n
 
     def exists(self, key: str) -> bool:
-        hit = (
-            self._log()
-            .filter(F.col("key") == key)
-            .orderBy(F.col("seq").desc())
-            .limit(1)
-            .collect()
-        )
-        return bool(hit) and hit[0]["value"] is not None
+        return key in self._lookup([key])
 
     def keys(self) -> DataFrame:
         return self._latest().filter(F.col("value").isNotNull()).select("key")
@@ -425,12 +597,10 @@ class KVStore:
         return self.scan().filter(F.col("key").startswith(prefix))
 
     def bucket_of(self, key: str) -> int:
-        """Deterministic bucket id, analog of data_path()'s
-        ``short_hash % num_bucket`` (local_file_kv_store.rs:62-70)."""
-        row = self.spark.range(1).select(
-            F.pmod(F.hash(F.lit(key)), F.lit(self.num_buckets)).alias("b")
-        ).first()
-        return int(row["b"])
+        """Deterministic bucket id at this handle's write fanout, analog
+        of data_path()'s ``short_hash % num_bucket``
+        (local_file_kv_store.rs:62-70); the read path's own hash."""
+        return bucket_id(key, self.num_buckets)
 
     def compact(self) -> None:
         """Fold the log: one row per live key, seq reset. O(store) — run
@@ -483,23 +653,23 @@ class KVStore:
         """The live table's bucket fanout as recorded in the catalog
         ('Num Buckets' row of DESCRIBE TABLE EXTENDED), or ``default``
         when the table is missing or unbucketed."""
-        try:
-            for row in self.spark.sql(
-                f"DESCRIBE TABLE EXTENDED {self.table}"
-            ).collect():
-                if row["col_name"] == "Num Buckets":
-                    return int(row["data_type"])
-        except Exception:
-            pass
-        return default
+        return int(self._catalog_info().get("Num Buckets", default))
 
     def _replace_with(self, snapshot: DataFrame) -> None:
         """Atomically replace the backing table with ``snapshot``
         (written at the CURRENT ``self.num_buckets``), using the
         crash-safe swap order documented on compact()."""
-        if self.location is not None:
-            self._compact_external(snapshot)
-            return
+        try:
+            if self.location is not None:
+                self._compact_external(snapshot)
+            else:
+                self._swap_managed(snapshot)
+        finally:
+            _LISTINGS.pop(self.table, None)
+
+    def _swap_managed(self, snapshot: DataFrame) -> None:
+        """Managed-table swap: snapshot -> ``_compact``, live -> ``_bak``,
+        ``_compact`` -> live, drop ``_bak``."""
         tmp = self.table + "_compact"
         bak = self.table + "_bak"
         (
@@ -610,15 +780,9 @@ class KVStore:
         # path owned by something else when the table lives in a
         # non-default database or under a LOCATION override, and the
         # conf lookup raised when the key was unset (ADVICE r5).
-        location = None
-        if self.spark.catalog.tableExists(self.table):
-            for row in self.spark.sql(
-                f"DESCRIBE TABLE EXTENDED {self.table}"
-            ).collect():
-                if row["col_name"] == "Location":
-                    location = row["data_type"]
-                    break
+        location = self._catalog_info().get("Location")
         self.spark.sql(f"DROP TABLE IF EXISTS {self.table}")
+        _LISTINGS.pop(self.table, None)
         # Clear the path too, through the JVM Hadoop FS so any
         # warehouse scheme works: a write that failed BETWEEN
         # location-create and catalog-register leaves an orphaned dir

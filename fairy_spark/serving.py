@@ -45,6 +45,9 @@ _SQL_ROW_CAP = 10_000
 def _make_handler(engine, kv_name: str):
     class Handler(BaseHTTPRequestHandler):
         protocol_version = "HTTP/1.1"
+        # Headers and body go out as two writes; with Nagle on, the body
+        # waits for the client's delayed ACK (~40 ms per reply).
+        disable_nagle_algorithm = True
 
         # silence per-request stderr logging (test noise)
         def log_message(self, *a):  # noqa: D102

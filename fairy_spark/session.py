@@ -29,11 +29,6 @@ def get_spark(cfg: EngineConfig | None = None) -> SparkSession:
         .config("spark.sql.files.maxPartitionBytes", cfg.max_partition_bytes)
         .config("spark.sql.autoBroadcastJoinThreshold", cfg.broadcast_threshold)
         .config("spark.sql.warehouse.dir", cfg.warehouse_dir)
-        # Keep bucketed scans on even when no join/agg consumes the
-        # distribution: KV point lookups (SURVEY §2.A A2/A4) rely on
-        # bucket PRUNING — at 100 TB a get() must touch 1/num_buckets
-        # of the files, and the auto rule would silently disable that.
-        .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         # Parquet TIMESTAMP(NANOS) (events.ts) is otherwise unreadable in

@@ -51,6 +51,64 @@ def sf_small():
     return SF_SMALL
 
 
+@pytest.fixture()
+def assert_one_bucket_read(monkeypatch):
+    """Check that a point read of ``key`` touches exactly one bucket:
+    the files the direct get hands to pyarrow, and the files in the
+    scan partitions of the Spark lookup (``KVStore._get_spark``), are
+    both the on-disk files of bucket ``bucket_of(key)`` at the fanout
+    the catalog holds. (The scan's "number of files read" metric counts
+    the listed files before bucket pruning, so it is not used.)"""
+    import re
+    from urllib.parse import unquote, urlparse
+
+    import fairy_spark.kv as kv_mod
+
+    def file_bucket(path: str) -> int:
+        return int(re.search(r"_(\d+)(?:\..*)?$", path).group(1))
+
+    def check(kv, key: str) -> None:
+        opened, frames = [], []
+        frame_cls = type(kv.spark.range(0))
+        read_table, collect = kv_mod.pq.read_table, frame_cls.collect
+
+        def spy_read(files, **kw):
+            opened.extend(files)
+            return read_table(files, **kw)
+
+        def spy_collect(df):
+            frames.append(df)
+            return collect(df)
+
+        with monkeypatch.context() as m:
+            m.setattr(kv_mod.pq, "read_table", spy_read)
+            m.setattr(frame_cls, "collect", spy_collect)
+            kv.exists(key)
+            kv._get_spark([key])
+        info = kv._catalog_info()
+        assert int(info["Num Buckets"]) == kv.num_buckets
+        bucket = kv.bucket_of(key)
+        loc = unquote(urlparse(info["Location"]).path)
+        on_disk = sorted(
+            n for n in os.listdir(loc)
+            if not n.startswith(("_", ".")) and file_bucket(n) == bucket
+        )
+        assert on_disk, "probe key's bucket holds no file"
+        assert sorted(os.path.basename(f) for f in opened) == on_disk
+        # _get_spark's collect is the last; a listing refresh collects DESCRIBE
+        frame = frames[-1]
+        leaves = frame._jdf.queryExecution().executedPlan().collectLeaves()
+        scanned = [
+            os.path.basename(unquote(urlparse(f.filePath().toString()).path))
+            for i in range(leaves.size())
+            for part in leaves.apply(i).inputRDDs().head().partitions()
+            for f in part.files()
+        ]
+        assert sorted(scanned) == on_disk
+
+    return check
+
+
 def pytest_terminal_summary(terminalreporter):
     """Name the parity gate when the default ``-m "not parity"`` left it
     out, so a green default run is not mistaken for the full gate."""

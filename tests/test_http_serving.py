@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import json
 import urllib.request
+from urllib.parse import quote
 
 import pytest
 
@@ -23,12 +24,19 @@ def _req(method: str, url: str, data: bytes | None = None):
         return e.code, e.read()
 
 
+KV_NAME = "kv_http_test"
+
+
 @pytest.fixture(scope="module")
-def server(spark):
+def engine(spark):
     from fairy_spark.engine import Engine
 
-    eng = Engine(spark=spark)
-    with serve(eng, kv_name="kv_http_test") as (host, port):
+    return Engine(spark=spark)
+
+
+@pytest.fixture(scope="module")
+def server(engine):
+    with serve(engine, kv_name=KV_NAME) as (host, port):
         yield f"http://{host}:{port}"
 
 
@@ -72,6 +80,23 @@ def test_exists_and_prefix_listing(server):
     st, body = _req("GET", f"{server}/keys?prefix=dir1/")
     assert st == 200
     assert body.decode().splitlines() == ["dir1/a", "dir1/b"]
+
+
+def test_delete_through_engine_is_404_and_not_exists(server, engine):
+    _req("PUT", f"{server}/put/doomed", b"bye")
+    assert _req("GET", f"{server}/get/doomed") == (200, b"bye")
+    engine.kv(KV_NAME).delete("doomed")
+    st, _ = _req("GET", f"{server}/get/doomed")
+    assert st == 404
+    assert _req("GET", f"{server}/exists/doomed") == (200, b"false")
+
+
+def test_non_ascii_key_with_slash_roundtrips(server):
+    key = quote("ключ/ü 🙂", safe="")
+    st, _ = _req("PUT", f"{server}/put/{key}", "значение".encode())
+    assert st == 200
+    assert _req("GET", f"{server}/get/{key}") == (200, "значение".encode())
+    assert _req("GET", f"{server}/exists/{key}") == (200, b"true")
 
 
 def test_sql_endpoint(server):

@@ -8,8 +8,10 @@ bucket determinism (A3/A4)."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import given, settings, strategies as st
+from pyspark.sql import functions as F
 
-from fairy_spark.kv import KeyNotFound, KVStore
+from fairy_spark.kv import KeyNotFound, KVStore, bucket_id
 
 
 @pytest.fixture()
@@ -77,11 +79,29 @@ def test_compact_preserves_live_state(kv):
     assert kv.get("a") == b"5"
 
 
-def test_bucket_determinism(kv):
-    b1 = kv.bucket_of("some-key")
-    b2 = kv.bucket_of("some-key")
-    assert b1 == b2
-    assert 0 <= b1 < kv.num_buckets
+# Every UTF-8 tail length (0-3 bytes past the last 4-byte block, and
+# 1-4 byte characters), empty and non-ASCII keys, on top of hypothesis'.
+_HASH_EDGES = ["", "a", "ab", "abc", "abcd", "ü", "aü", "€", "a€", "🙂", "ключ/ü", "k\x00"]
+
+
+@settings(max_examples=20, deadline=None)
+@given(st.lists(st.text(max_size=12), min_size=1, max_size=30, unique=True))
+def test_bucket_determinism(spark, keys):
+    """The read path's Python hash (``bucket_id``, and ``bucket_of``
+    through it) places every key where Spark's ``bucketBy`` does:
+    ``pmod(hash(key), n)``, for arbitrary text and fanouts."""
+    keys = list(dict.fromkeys(keys + _HASH_EDGES))
+    fanouts = (1, 7, 8, 1024)
+    df = spark.createDataFrame([(k,) for k in keys], "k string")
+    want = {
+        r["k"]: tuple(r[1:])
+        for r in df.select(
+            "k", *(F.pmod(F.hash(F.col("k")), F.lit(n)).alias(f"b{n}") for n in fanouts)
+        ).collect()
+    }
+    assert {k: tuple(bucket_id(k, n) for n in fanouts) for k in keys} == want
+    kv8 = KVStore(spark, name="bucket_probe", num_buckets=8)
+    assert [kv8.bucket_of(k) for k in keys] == [want[k][2] for k in keys]
 
 
 def test_put_df_bulk_ingest(kv, spark):
@@ -207,13 +227,16 @@ def test_compact_hard_crash_recovery(kv, spark):
 
 
 def test_random_op_sequences_match_dict_model(kv, spark):
-    """Model-based check: a random put/delete/compact/evict sequence
-    must leave the store observationally equal to a plain dict applying
-    the same ops (get/exists/scan). Deterministic LCG 'randomness' so a
-    failure replays exactly (SURVEY.md §7.5 forbids builtin hash();
-    same spirit: no seed-dependent flakes). Covers the interleavings
-    the single-idiom lifecycle tests above can't: delete-then-compact,
-    overwrite-after-evict, compact-then-more-puts."""
+    """Model-based check: a random put/delete/delete_prefix/expire/
+    compact/evict/rebucket sequence must leave the store
+    observationally equal to a plain dict applying the same ops. After
+    EVERY step the direct reads (get/exists/multi_get) must equal both
+    the model and the Spark lookup (_get_spark). Deterministic LCG
+    'randomness' so a failure replays exactly (SURVEY.md §7.5 forbids
+    builtin hash(); same spirit: no seed-dependent flakes). Covers the
+    interleavings the single-idiom lifecycle tests above can't:
+    delete-then-compact, overwrite-after-evict, compact-then-more-puts,
+    reads across a fanout change."""
     state = 0xC0FFEE
 
     def rng(n):
@@ -222,27 +245,84 @@ def test_random_op_sequences_match_dict_model(kv, spark):
         return state % n
 
     model: dict[str, bytes] = {}
-    keys = [f"k{i}" for i in range(6)]
+    written: dict[str, int] = {}  # live key -> seq of its latest write
+    seq = 0  # the log's max seq, as _alloc_seq sees it
+    keys = [f"k{i}" for i in range(6)] + ["", "ключ/ü"]
     for step in range(40):
-        op = rng(10)
+        op = rng(14)
         k = keys[rng(len(keys))]
         if op < 6:  # put (incl. overwrite)
             v = bytes([rng(256), step % 256])
             kv.put(k, v)
-            model[k] = v
-        elif op < 8:  # delete (missing-key delete is a no-op tombstone)
+            seq += 1
+            model[k], written[k] = v, seq
+        elif op < 8:  # delete (missing-key delete still writes a tombstone)
             kv.delete(k)
+            seq += 1
             model.pop(k, None)
         elif op == 8:
+            prefix = ["k", "k1", "", "к"][rng(4)]
+            doomed = [x for x in model if x.startswith(prefix)]
+            assert kv.delete_prefix(prefix) == len(doomed)
+            seq += bool(doomed)
+            for x in doomed:
+                del model[x]
+        elif op == 9:
+            cutoff = rng(seq + 2)
+            stale = [x for x in model if written[x] < cutoff]
+            assert kv.expire_older_than(cutoff) == len(stale)
+            seq += bool(stale)
+            for x in stale:
+                del model[x]
+        elif op == 10:
+            kv.rebucket([1, 3, 8, 16][rng(4)])
+        elif op == 11:
             kv.compact()
+            seq = 1 if model else 0
+            written = dict.fromkeys(model, 1)
         else:
             kv.evict(keep_latest=len(model) or 1)
             # evict(keep_latest=len(model)) keeps every LIVE key (it
             # drops oldest beyond the count); model unchanged
+        written = {x: written[x] for x in model}
+        assert kv._get_spark(keys) == model, step
+        assert kv.multi_get(keys) == model, step
+        for x in keys:
+            assert kv.exists(x) == (x in model), (step, x)
+            if x in model:
+                assert kv.get(x) == model[x], (step, x)
+            else:
+                with pytest.raises(KeyNotFound):
+                    kv.get(x)
     live = {r["key"]: bytes(r["value"]) for r in kv.scan().collect()}
     assert live == model
-    for k in keys:
-        assert kv.exists(k) == (k in model)
+
+
+def test_get_sees_another_handles_put(kv, spark):
+    """A read after another handle's commit returns the new value: the
+    file listing the direct read caches is shared by every handle and
+    dropped by each commit, not kept per handle."""
+    kv.put("k", b"from-a")
+    assert kv.get("k") == b"from-a"
+    other = KVStore(spark, name="test", num_buckets=8)
+    other.put("k", b"from-b")
+    other.put("new", b"fresh")
+    assert kv.get("k") == b"from-b"
+    assert kv.exists("new") and kv.multi_get(["k", "new"]) == {"k": b"from-b", "new": b"fresh"}
+    other.delete("k")
+    assert not kv.exists("k")
+
+
+def test_get_uses_catalog_fanout_not_handles(kv, spark):
+    """A handle opened with another fanout still finds every key: the
+    direct read hashes with the catalog's bucket count, not the
+    handle's ``num_buckets``."""
+    pairs = [(f"key{i}", f"v{i}".encode()) for i in range(64)]
+    kv.put_batch(pairs)
+    wide = KVStore(spark, name="test", num_buckets=1024)
+    assert all(wide.get(k) == v for k, v in pairs)
+    assert all(wide.exists(k) for k, _ in pairs)
+    assert wide.multi_get([k for k, _ in pairs] + ["absent"]) == dict(pairs)
 
 
 def test_scan_as_of_reconstructs_history_until_compaction(spark):
@@ -437,14 +517,77 @@ def test_multi_get_batched_lookup(kv):
 
 
 def test_multi_get_in_filter_in_plan(kv):
-    # the design point: the batch probe is a single In filter on the
-    # key column (pushed to the bucketed scan), not per-key jobs
+    # the Spark lookup's design point (_get_spark): the batch probe is
+    # a single In filter on the key column (pushed to the bucketed
+    # scan), not per-key jobs
     kv.put_batch([("a", b"1"), ("b", b"2")])
     from pyspark.sql import functions as F
 
     df = kv._log().filter(F.col("key").isin(["a", "b"]))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "key#" in plan and " IN (a,b)" in plan, plan
+
+
+def test_non_local_location_takes_the_spark_path(kv, monkeypatch):
+    """The read path is chosen from the catalog location: a location
+    with a non-local scheme (hdfs://, s3a://, ...) is served by the
+    Spark lookup and never handed to pyarrow."""
+    import fairy_spark.kv as kv_mod
+
+    kv.put_batch([("a", b"1"), ("b", b"2")])
+    kv.delete("b")
+    info = kv._catalog_info()
+    remote = {**info, "Location": f"hdfs://namenode:8020/warehouse/{kv.table}"}
+    monkeypatch.setattr(KVStore, "_catalog_info", lambda self: remote)
+    monkeypatch.setattr(kv_mod.pq, "read_table", lambda *a, **k: pytest.fail("direct read"))
+    kv_mod._LISTINGS.pop(kv.table, None)
+    assert kv.get("a") == b"1"
+    assert not kv.exists("b")
+    assert kv.multi_get(["a", "b", "c"]) == {"a": b"1"}
+
+
+def test_concurrent_gets_beside_puts_never_stale(kv):
+    """Serving threads share the listing cache without a lock. Eight
+    readers (more than the cores) get one key while the writer
+    overwrites it; every read must return a version no older than the
+    last put acknowledged before the read began."""
+    import sys
+    import threading
+
+    kv.put("hot", b"0")
+    acked = 0
+    problems: list = []
+    stop = threading.Event()
+
+    def reader():
+        while not stop.is_set():
+            floor = acked
+            try:
+                seen = int(kv.get("hot"))
+            except Exception as e:  # a failed read is a finding, not a crash
+                problems.append(e)
+                return
+            if seen < floor:
+                problems.append((seen, floor))
+                return
+
+    readers = [threading.Thread(target=reader, daemon=True) for _ in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in readers:
+            t.start()
+        for version in range(1, 6):
+            kv.put("hot", str(version).encode())
+            acked = version
+    finally:
+        stop.set()
+        for t in readers:
+            t.join(timeout=60)
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in readers)
+    assert not problems, problems[:3]
+    assert kv.get("hot") == b"5"
 
 
 def test_rebucket_preserves_state_and_history(kv):
@@ -476,11 +619,10 @@ def test_rebucket_same_fanout_is_noop(kv):
     assert kv.get("a") == b"1"
 
 
-def test_rebucket_point_lookup_still_bucket_pruned(kv):
+def test_rebucket_point_lookup_still_bucket_pruned(kv, assert_one_bucket_read):
     kv.put_batch([(f"k{i}", b"x") for i in range(16)])
     kv.rebucket(4)
-    plan = kv._log().filter("key = 'k5'")._jdf.queryExecution().executedPlan().toString()
-    assert "SelectedBucketsCount: 1 out of 4" in plan, plan
+    assert_one_bucket_read(kv, "k5")
 
 
 def test_rebucket_location_store_survives_restart(kv_loc, spark):
@@ -506,7 +648,9 @@ def test_rebucket_then_compact_composes(kv):
     assert kv._log().count() == 10  # compact folded history at new fanout
 
 
-def test_rebucket_failure_after_swap_keeps_committed_fanout(kv, monkeypatch):
+def test_rebucket_failure_after_swap_keeps_committed_fanout(
+    kv, monkeypatch, assert_one_bucket_read
+):
     # ADVICE r10: if _replace_with throws AFTER the new-layout table is
     # live (e.g. the trailing _bak DROP fails), the handle must adopt
     # the committed fanout, not roll back to the stale one.
@@ -524,8 +668,7 @@ def test_rebucket_failure_after_swap_keeps_committed_fanout(kv, monkeypatch):
     # fanout matches the on-disk layout → pruning and gets stay correct
     assert kv.num_buckets == 16
     assert kv.get("k5") == b"x"
-    plan = kv._log().filter("key = 'k5'")._jdf.queryExecution().executedPlan().toString()
-    assert "SelectedBucketsCount: 1 out of 16" in plan, plan
+    assert_one_bucket_read(kv, "k5")
 
 
 def test_rebucket_failure_before_swap_rolls_back_fanout(kv, monkeypatch):

@@ -129,17 +129,20 @@ def test_ngram_jaccard_pair_join_keyed_by_block_and_band(spark, sf_dir):
         assert any(key in line for line in keyed), (key, keyed)
 
 
-def test_kv_point_lookup_prunes_buckets(spark):
-    """A2/A4 contract: a point get on the bucketed store must prune to
-    one bucket file, not scan the table."""
+def test_kv_point_lookup_prunes_buckets(spark, assert_one_bucket_read):
+    """A2/A4 contract: a point get on the bucketed store must read one
+    bucket's files, not scan the table — on the direct read and on the
+    Spark lookup alike. The latest-wins aggregate over the whole store
+    still plans on the bucket layout, with no shuffle."""
     from fairy_spark.kv import KVStore
 
     kv = KVStore(spark, name="plan_probe", num_buckets=8)
     kv.drop()
     kv.put_batch([(f"k{i}", bytes([i])) for i in range(32)])
-    probe = spark.table(kv.table).filter(F.col("key") == "k3")
-    plan = plan_of(probe)
-    assert "SelectedBucketsCount: 1 out of 8" in plan, plan
+    kv.put_batch([(f"k{i}", bytes([i + 1])) for i in range(0, 32, 3)])
+    assert_one_bucket_read(kv, "k3")
+    plan = plan_of(kv._latest())
+    assert "Exchange" not in plan and "Bucketed: true" in plan, plan
     kv.drop()
 
 
