@@ -249,9 +249,9 @@ class KVStore:
                 if cat.tableExists(t):
                     self.spark.sql(f"DROP TABLE IF EXISTS {t}")
 
-    def _hadoop_path(self, p: str):
+    def _hadoop_path(self, *parts: str):
         jvm = self.spark.sparkContext._jvm
-        return jvm.org.apache.hadoop.fs.Path(p)
+        return jvm.org.apache.hadoop.fs.Path(*parts)
 
     def _hadoop_fs(self, path):
         return path.getFileSystem(self.spark.sparkContext._jsc.hadoopConfiguration())
@@ -299,10 +299,7 @@ class KVStore:
         Two handles writing CONCURRENTLY can still read the same max;
         single live writer per table is the documented contract (the
         reference's local FS store assumes the same)."""
-        if self._exists_table():
-            row = self._log().agg(F.max("seq").alias("m")).first()
-            return (row["m"] or 0) + 1
-        return 1
+        return self.current_seq() + 1
 
     def _append_df(self, df: DataFrame) -> None:
         """Append one write generation to the log table. All mutating
@@ -501,10 +498,10 @@ class KVStore:
         return self._tombstone_where((F.col("key") >= start) & (F.col("key") < end))
 
     def _tombstone_where(self, pred: Column) -> int:
-        """Shared range/prefix delete body: live keys matching ``pred``
-        get a tombstone under one new sequence (expire_older_than's
-        materialize-then-append discipline — the plan reads the table
-        the append writes)."""
+        """Shared tombstone body of the range/prefix deletes, expiry and
+        eviction: live keys whose latest row matches ``pred`` get a
+        tombstone under one new sequence. Returns the number of keys
+        tombstoned."""
         doomed_keys = (
             self._latest()
             .filter(F.col("value").isNotNull())
@@ -516,6 +513,13 @@ class KVStore:
             doomed_keys.withColumn("value", F.lit(None).cast("binary"))
             .withColumn("seq", F.lit(seq).cast("bigint"))
             .select("key", "value", "seq")
+            # Materialize BEFORE the append: the plan reads the same
+            # log table the append writes into, so a lazy plan would
+            # (a) re-run the full latest-wins agg for the write after
+            # the count() already ran it, and (b) lean on Spark not
+            # reordering a self-referential insert. localCheckpoint
+            # pins the result once; count and append both read the
+            # materialized rows (ADVICE r7).
             .localCheckpoint(eager=True)
         )
         n = doomed.count()
@@ -533,29 +537,7 @@ class KVStore:
         rewrite of the log (compact() reclaims space later, and
         scan_as_of still reconstructs pre-expiry state: eviction is
         itself versioned). Returns the number of keys expired."""
-        stale = (
-            self._latest()
-            .filter(F.col("value").isNotNull() & (F.col("seq") < min_seq))
-            .select("key")
-        )
-        seq = self._alloc_seq()
-        doomed = (
-            stale.withColumn("value", F.lit(None).cast("binary"))
-            .withColumn("seq", F.lit(seq).cast("bigint"))
-            .select("key", "value", "seq")
-            # Materialize BEFORE the append: the plan reads the same
-            # log table the append writes into, so a lazy plan would
-            # (a) re-run the full latest-wins agg for the write after
-            # the count() already ran it, and (b) lean on Spark not
-            # reordering a self-referential insert. localCheckpoint
-            # pins the O(stale)-row result once; count and append both
-            # read the materialized rows (ADVICE r7).
-            .localCheckpoint(eager=True)
-        )
-        n = doomed.count()
-        if n:
-            self._append_df(doomed)
-        return n
+        return self._tombstone_where(F.col("seq") < min_seq)
 
     def exists(self, key: str) -> bool:
         return key in self._lookup([key])
@@ -570,7 +552,7 @@ class KVStore:
     def current_seq(self) -> int:
         """Latest committed write sequence (0 for an empty store) — the
         snapshot handle for :meth:`scan_as_of`. Parquet footer-stats
-        aggregate, same metadata-only cost as _alloc_seq."""
+        aggregate: metadata cost, not a scan."""
         if not self._exists_table():
             return 0
         row = self._log().agg(F.max("seq").alias("m")).first()
@@ -742,15 +724,16 @@ class KVStore:
         against that boundary. Recency order is (seq DESC, key ASC),
         encoded as an ascending struct(-seq, key) so the boundary is its
         max over the kept set."""
-        live = self._latest().filter(F.col("value").isNotNull())
         recency = F.struct(
             (-F.col("seq")).alias("ns"), F.col("key").alias("k")
         )
         if keep_latest <= 0:
-            victims = live.select("key")
+            pred = F.lit(True)
         else:
             kept = (
-                live.select(recency.alias("_r"))
+                self._latest()
+                .filter(F.col("value").isNotNull())
+                .select(recency.alias("_r"))
                 .orderBy("_r")
                 .limit(keep_latest)
             )
@@ -761,16 +744,9 @@ class KVStore:
                 F.lit(row["b"]["ns"]).cast("long").alias("ns"),
                 F.lit(row["b"]["k"]).alias("k"),
             )
-            victims = live.filter(recency > bound).select("key")
-        n = victims.count()
+            pred = recency > bound
+        n = self._tombstone_where(pred)
         if n:
-            seq = self._alloc_seq()
-            tombstones = victims.select(
-                "key",
-                F.lit(None).cast("binary").alias("value"),
-                F.lit(seq).cast("long").alias("seq"),
-            )
-            self._append_df(tombstones)
             self.compact()
         return n
 
@@ -788,8 +764,6 @@ class KVStore:
         # location-create and catalog-register leaves an orphaned dir
         # the next saveAsTable refuses to reuse
         # (LOCATION_ALREADY_EXISTS); drop() guarantees a clean slate.
-        jvm = self.spark.sparkContext._jvm
-        jsc = self.spark.sparkContext._jsc
         if self.location is not None:
             # Location-backed store: destroy the durable log AND any
             # leftover compaction snapshot — drop() means the data is
@@ -801,7 +775,7 @@ class KVStore:
                     fs.delete(path, True)
             return
         if location is not None:
-            path = jvm.org.apache.hadoop.fs.Path(location)
+            path = self._hadoop_path(location)
         else:
             # Orphan case — the table was never catalog-registered, so
             # the only candidate is the default managed path; skip if
@@ -809,7 +783,7 @@ class KVStore:
             warehouse = self.spark.conf.get("spark.sql.warehouse.dir", None)
             if warehouse is None:
                 return
-            path = jvm.org.apache.hadoop.fs.Path(warehouse, self.table.lower())
-        fs = path.getFileSystem(jsc.hadoopConfiguration())
+            path = self._hadoop_path(warehouse, self.table.lower())
+        fs = self._hadoop_fs(path)
         if fs.exists(path):
             fs.delete(path, True)

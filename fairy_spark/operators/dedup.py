@@ -16,7 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
-from fairy_spark.operators.pool import park_persisted
 from fairy_spark.operators.skew import spread_width
 from fairy_spark.operators.text import (
     jaccard,
@@ -778,13 +777,13 @@ def simhash64_pairs(
     # 64-accumulator hash agg — fed BOTH self-join sides
     # unmaterialized, so the before-plan computed the whole signature
     # subtree twice (and broadcast one un-materialized O(corpus)
-    # subtree wholesale). Checkpoint-mode park: ONE evaluation; the
+    # subtree wholesale). One eager localCheckpoint: ONE evaluation; the
     # LogicalRDD leaf carries the true materialized size, so the
     # banded join stays statistics-driven — the 8×|docs|-row frame
     # broadcasts while it genuinely fits and demotes to the shuffle
     # equi-join at scale (measured 6.8 s → 3.7 s at sf0.1).
 
-    sig = park_persisted("simhash", sig, checkpoint=True)
+    sig = sig.localCheckpoint(eager=True)
     bands = F.array(
         *[
             F.struct(
@@ -1014,20 +1013,16 @@ def winnow_best_match(
     # branch (checkpoint, not persist: the statistics-less leaf keeps
     # the corpus-shaped fingerprint table out of broadcast plans, which
     # is also the only plan that survives at 100 TB).
-    fps = park_persisted(
-        "winnow",
-        (_winnow_fps_arrow if engine == "arrow" else _winnow_fps_hof)(
-            docs, id_col, text_col, k, w
-        ),
-        checkpoint=True,
-    )
+    fps = (_winnow_fps_arrow if engine == "arrow" else _winnow_fps_hof)(
+        docs, id_col, text_col, k, w
+    ).localCheckpoint(eager=True)
     df_counts = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("df"))
-    keep = park_persisted(
-        "winnow",
+    keep = (
         fps.join(
             df_counts.filter((F.col("df") >= min_df) & (F.col("df") <= max_df)), "fp"
-        ).select("id", "n_fp", "fp"),
-        checkpoint=True,
+        )
+        .select("id", "n_fp", "fp")
+        .localCheckpoint(eager=True)
     )
     a, b = keep.alias("a"), keep.alias("b")
     pairs = (
@@ -1086,13 +1081,14 @@ def hamming_pairs(
     band_bits = bits // n_bands
     mask = (1 << band_bits) - 1
     # r14 (guide §1.2 step 1): the caller's fingerprint frame feeds
-    # BOTH self-join sides — for the multimodal rows that frame is a
-    # mapInPandas decode+hash pass, so unmaterialized it crossed the
-    # Python boundary twice. One checkpoint-mode park (same argument
-    # as simhash64_pairs: single evaluation, materialized-size
-    # statistics keep the banded-join strategy data-driven).
+    # BOTH self-join sides — a mapInPandas decode+hash pass for the
+    # multimodal rows, the simhash signature pass for the simhash rows
+    # — so unmaterialized it ran twice. One eager localCheckpoint
+    # (same argument as simhash64_pairs: single evaluation, the leaf's
+    # size estimate keeps the banded-join strategy data-driven;
+    # measured 6.9 → 4.2 s on dedup_simhash_hamming).
 
-    sig = park_persisted("hamming_pairs", sig, checkpoint=True)
+    sig = sig.localCheckpoint(eager=True)
     bands = F.array(
         *[
             F.struct(
@@ -1467,20 +1463,19 @@ def dedup_lines_near(
     twice), `distinct` (feeds the signature build and the keep join:
     the 16-byte-digest shuffle ran three times), and `sig` (both
     aliases of the banded self-join re-ran the per-distinct-line
-    shingle+minhash pass). Checkpoint-mode throughout: all three are
+    shingle+minhash pass). localCheckpoint throughout: all three are
     corpus-shaped, and a statistics-less leaf keeps them out of
     broadcast plans — the only plan that survives at 100 TB."""
 
-    lines = park_persisted(
-        "linesnear",
+    lines = (
         docs.select(
             F.col(id_col).alias("_id"),
             F.posexplode(F.split(F.col(text_col), "\n")).alias("_line_no", "_line"),
-        ).withColumn("_dig", F.md5(F.col("_line"))),
-        checkpoint=True,
+        )
+        .withColumn("_dig", F.md5(F.col("_line")))
+        .localCheckpoint(eager=True)
     )
-    distinct = park_persisted(
-        "linesnear",
+    distinct = (
         lines.filter(F.length("_line") >= min_line_chars)
         .groupBy("_dig")
         .agg(
@@ -1489,11 +1484,10 @@ def dedup_lines_near(
             # min() picks it deterministically and the partial (map-
             # side) agg collapses copies before the string ships
             F.min("_line").alias("_rep"),
-        ),
-        checkpoint=True,
+        )
+        .localCheckpoint(eager=True)
     )
-    sig = park_persisted(
-        "linesnear",
+    sig = (
         distinct.select(
             "_dig",
             "_first",
@@ -1501,8 +1495,8 @@ def dedup_lines_near(
         )
         .withColumn("_nsh", F.size("_sh"))
         .filter(F.col("_nsh") >= 1)
-        .withColumn("_sig", minhash_signature(F.col("_sh"), num_hashes)),
-        checkpoint=True,
+        .withColumn("_sig", minhash_signature(F.col("_sh"), num_hashes))
+        .localCheckpoint(eager=True)
     )
     bands = sig.select(
         "_dig", "_first", "_sh", "_nsh", F.posexplode("_sig").alias("_band", "_bv")
@@ -1645,16 +1639,12 @@ def dedup_lines_near_append(
         # r14 (guide §1.2 step 1): the derived index feeds base_sigs
         # AND base_digs — without a boundary the whole base explode +
         # digest agg + shingle/sig pass ran twice. Only the
-        # derived-from-docs path parks: a caller-passed base_index
+        # derived-from-docs path checkpoints: a caller-passed base_index
         # (the streaming leg's parquet-backed durable index) is
         # already materialized.
-        base_index = park_persisted(
-            "linesnear",
-            line_near_index(
-                base_docs, id_col, text_col, shingle_n, num_hashes, min_line_chars
-            ),
-            checkpoint=True,
-        )
+        base_index = line_near_index(
+            base_docs, id_col, text_col, shingle_n, num_hashes, min_line_chars
+        ).localCheckpoint(eager=True)
     base_sigs = base_index.filter(F.col("_nsh") >= 1).select(
         "_dig", "_first", "_sh", "_nsh", "_sig"
     )
@@ -1668,13 +1658,13 @@ def dedup_lines_near_append(
     # Per-streaming-batch cost is one localCheckpoint of a
     # |delta|-bound frame each, in exchange for halving the per-batch
     # recompute.
-    delta_lines = park_persisted(
-        "linesnear",
+    delta_lines = (
         delta_docs.select(
             F.col(id_col).alias("_id"),
             F.posexplode(F.split(F.col(text_col), "\n")).alias("_line_no", "_line"),
-        ).withColumn("_dig", F.md5(F.col("_line"))),
-        checkpoint=True,
+        )
+        .withColumn("_dig", F.md5(F.col("_line")))
+        .localCheckpoint(eager=True)
     )
     delta_firsts = (
         delta_lines.filter(F.length("_line") >= min_line_chars)
@@ -1687,15 +1677,14 @@ def dedup_lines_near_append(
     # fuzzy work only for digests the base has never seen — an exact
     # base repeat already drops below, cheaper than any signature
     delta_new = delta_firsts.join(base_digs, "_dig", "left_anti")
-    delta_sigs = park_persisted(
-        "linesnear",
+    delta_sigs = (
         delta_new.select(
             "_dig", "_first", shingle_set(F.col("_rep"), shingle_n).alias("_sh")
         )
         .withColumn("_nsh", F.size("_sh"))
         .filter(F.col("_nsh") >= 1)
-        .withColumn("_sig", minhash_signature(F.col("_sh"), num_hashes)),
-        checkpoint=True,
+        .withColumn("_sig", minhash_signature(F.col("_sh"), num_hashes))
+        .localCheckpoint(eager=True)
     )
 
     def banded(df: DataFrame) -> DataFrame:

@@ -36,7 +36,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from fairy_spark.operators.pool import park_persisted
 from fairy_spark.operators.text import (
     EN_STOPWORDS,
     mean_token_len,
@@ -292,9 +291,7 @@ def _cleaned_corpus(
     # branches of the near-dup stage (signature build, survivor-length
     # join, final anti-join), each of which re-ran the Gopher tokenize
     # scan + sha2 agg without this boundary (guide §1.2 step 1).
-    q2 = park_persisted(
-        "pipeline", q1.join(canonical, id_col, "left_semi"), checkpoint=True
-    )
+    q2 = q1.join(canonical, id_col, "left_semi").localCheckpoint(eager=True)
     return near_dup_removed(
         q2,
         id_col,
@@ -314,16 +311,14 @@ def _pack_and_split(
     decontaminated survivors."""
     from fairy_spark.operators.packing import pack_into_bins
 
-    # r14: park the slim (id, n_tokens) frame — pack_into_bins
+    # r14: checkpoint the slim (id, n_tokens) frame — pack_into_bins
     # evaluates its input three times (bounds agg, shard subtotals,
     # final windowed plan); without this each pass re-ran the whole
     # decontamination suffix (guide §2.3 — decide on a lightweight
     # proxy, never re-derive the heavy lineage per pass).
-    t = park_persisted(
-        "pipeline",
-        q4.select(id_col, F.size(tokenize(F.col(text_col))).alias("n_tokens")),
-        checkpoint=True,
-    )
+    t = q4.select(
+        id_col, F.size(tokenize(F.col(text_col))).alias("n_tokens")
+    ).localCheckpoint(eager=True)
     packed = pack_into_bins(t, id_col, "n_tokens", bin_tokens=bin_tokens)
     bucket = (
         portable_hash64(F.col(id_col).cast("string"), seed="split") % 100
@@ -390,7 +385,7 @@ def pretrain_corpus(
         # manager — decontaminate consumes q3 twice (gram explode +
         # anti-join) and the packing passes re-derive everything
         # below otherwise.
-        q3 = park_persisted("pipeline", q3, checkpoint=True)
+        q3 = q3.localCheckpoint(eager=True)
     q4 = (
         q3
         if probe_docs is None

@@ -1,4 +1,4 @@
-"""Bounded named pools for materialized intermediate frames.
+"""One bounded FIFO of persisted intermediate frames.
 
 The optimization rounds' recompute-amplification fix (guide §1.2 step 1,
 §2.4, §5): several operators build an expensive frame that feeds
@@ -11,173 +11,62 @@ subtree re-executes once per branch — measured 10,780 parquet scans in
 ONE declarative-pipeline plan and 66 lineitem scans per triangle query
 before r14.
 
-Two materialization modes (see park_persisted's docstring for the
-measured trade-off): ``persist`` + eager count for small-plan frames —
-the InMemoryRelation keeps accurate size statistics so broadcast joins
-survive planning — and ``localCheckpoint(eager=True)`` for
-lineage-heavy frames, where a persisted entry's multi-thousand-node
-plan would tax EVERY later action in the session with CacheManager
-plan comparisons (guide §5: "localCheckpoint() is a cheaper way to cut
-lineage").
+A boundary takes one of two forms, chosen per site by the frame's
+LINEAGE SIZE (measured trade-off, r14):
 
-The bounded FIFO pool keeps the most recent frames referenced so a
-still-lazy caller's frame is not reclaimed, and evicts beyond the cap
-(persisted frames are unpersisted — correctness-safe, Spark recomputes
-from lineage; checkpointed frames drop the reference and the
-ContextCleaner reclaims their blocks after GC). Trade-off at 100 TB:
-localCheckpoint forfeits lineage-based recovery of the materialized
-stage (an executor loss invalidates the frame) — the production shape
-for a multi-TB boundary is the durable parquet stage (``stage_dir`` of
-operators/pipeline.py pretrain_corpus, which Engine.pretrain_corpus
-always sets), and the unstaged form's in-memory boundary deliberately
-mirrors it.
+- ``park_persisted(df)`` — ``persist`` + eager count. The
+  InMemoryRelation carries accurate post-materialization size
+  statistics, so Catalyst still plans broadcast joins over the frame
+  (winnow's pair self-join measured 1.3 s persisted vs 28 s
+  checkpointed, purely from BHJ → SMJ demotion against a
+  statistics-less leaf). Right for frames whose logical plan is small.
+- ``df.localCheckpoint(eager=True)`` — the plan is CUT to a LogicalRDD
+  leaf and the CacheManager is never touched. Right for lineage-heavy
+  frames (the pipeline's cleaned corpus nests the whole
+  connected-components loop): persisting those registers a
+  multi-thousand-node plan that every later action in the SESSION pays
+  canonicalization/comparison against (measured 51 s → 144 s on an
+  unrelated query that merely ran after one). Sites call it directly:
+  the downstream plan's LogicalRDD holds the checkpointed RDD, and the
+  ContextCleaner frees its blocks once no plan references it, so there
+  is nothing for a pool to track.
 
-This is NOT cross-run result caching: every query invocation
-materializes its OWN freshly-built frame (nothing is keyed on the
-input path or reused between invocations), and the eager
+The rule for persisted frames: every one joins a single process-wide
+FIFO, and past ``_CAP`` frames the oldest is unpersisted. An evicted
+frame that is still in use is recomputed from its lineage — a cost,
+never a wrong answer. This is NOT cross-run result caching: every query
+invocation materializes its OWN freshly-built frame, and the eager
 materialization runs inside the bench's timed window.
 """
 
 from __future__ import annotations
 
 import threading
-import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
+_CAP = 32
 _LOCK = threading.Lock()
-# effective pool name -> list of (frame, was_persisted); insertion
-# order of the dict itself is the cross-pool eviction order.
-_POOLS: dict[str, list[tuple[DataFrame, bool]]] = {}
-_DEFAULT_CAP = 4
-# Total parked frames across ALL pools (leak bound now that pools can
-# be invocation-scoped): beyond it, the oldest frames of the
-# least-recently-created OTHER pools are evicted first.
-_GLOBAL_CAP = 32
-
-# Per-invocation pool scoping (VERDICT r14 #7): shared pool names were
-# a latent perf hazard — every graph query parks into pool "wedges"
-# (cap 4, FIFO), so two queries interleaved in one session could evict
-# each other's persisted frames mid-use (Spark recomputes correctly;
-# the park's benefit silently vanishes). A scope suffixes the pool
-# name per query invocation, so concurrent/interleaved invocations
-# never share a FIFO. Thread-local: concurrent driver threads (guide
-# §2.6) each get their own scope.
-_SCOPE = threading.local()
+_PERSISTED: list[DataFrame] = []
 
 
-@contextmanager
-def pool_scope(tag: str = ""):
-    """Enter a fresh park scope: park_persisted calls inside suffix
-    their pool names with a per-invocation token. Re-entrant (the
-    previous scope is restored on exit); exiting does NOT evict the
-    scope's frames — the returned DataFrames are lazy and consumed
-    after the builder returns — the global frame cap bounds them."""
-    token = f"{tag}#{uuid.uuid4().hex[:8]}"
-    prev = getattr(_SCOPE, "value", None)
-    _SCOPE.value = token
-    try:
-        yield token
-    finally:
-        _SCOPE.value = prev
-
-
-def park_persisted(
-    pool: str,
-    df: DataFrame,
-    cap: int = _DEFAULT_CAP,
-    checkpoint: bool = False,
-    reliable: bool = False,
-) -> DataFrame:
-    """Materialize ``df`` eagerly and park the result in the named
-    bounded pool; returns the materialized frame.
-
-    Two modes, chosen by the frame's LINEAGE SIZE (measured trade-off,
-    r14):
-
-    - ``checkpoint=False`` (default) — ``persist`` + eager count. The
-      InMemoryRelation carries accurate post-materialization size
-      statistics, so Catalyst still plans broadcast joins over the
-      frame (winnow's pair self-join measured 1.3 s persisted vs 28 s
-      checkpointed, purely from BHJ → SMJ demotion against a
-      statistics-less leaf). Right for frames whose logical plan is
-      small. Evicted frames are unpersisted.
-    - ``checkpoint=True`` — ``localCheckpoint``: the plan is CUT to a
-      LogicalRDD leaf and the CacheManager is never touched. Right for
-      lineage-heavy frames (the pipeline's cleaned corpus nests the
-      whole connected-components loop): persisting those registers a
-      multi-thousand-node plan that every later action in the SESSION
-      pays canonicalization/comparison against (measured 51 s → 144 s
-      on an unrelated query that merely ran after one). Evicted frames
-      just drop the reference; the ContextCleaner reclaims blocks.
-    - ``reliable=True`` (VERDICT r14 #9) — ``df.checkpoint()`` against
-      the context's checkpoint dir (set from
-      $FAIRY_SPARK_CHECKPOINT_DIR, or a fresh temp dir, when unset).
-      Same lineage cut as localCheckpoint but the blocks are written to
-      the (shared at scale) checkpoint filesystem, so an executor loss
-      does NOT invalidate the frame — the mode a real cluster run needs
-      for multi-TB boundaries; localCheckpoint blocks are
-      executor-local and unreplicated. Costs a durable write; keep the
-      default local mode for this harness's single-box bench.
-    """
-    if reliable:
-        sc = df.sparkSession.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isEmpty():
-            import os
-            import tempfile
-
-            sc.setCheckpointDir(
-                os.environ.get("FAIRY_SPARK_CHECKPOINT_DIR")
-                or tempfile.mkdtemp(prefix="fairy_spark_ckpt_")
-            )
-        df = df.checkpoint(eager=True)
-        checkpoint = True  # pool bookkeeping: nothing to unpersist on evict
-    if checkpoint and not reliable:
-        df = df.localCheckpoint(eager=True)
-    elif not checkpoint:
+def park_persisted(df: DataFrame) -> DataFrame:
+    """Persist ``df`` (MEMORY_AND_DISK, materialized by one count unless
+    it is already cached), append it to the FIFO and unpersist the
+    oldest frame past ``_CAP``; returns ``df``."""
+    if not df.is_cached:
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
         df.count()
-    scope = getattr(_SCOPE, "value", None)
-    effective = f"{pool}@{scope}" if scope else pool
     with _LOCK:
-        frames = _POOLS.setdefault(effective, [])
-        frames.append((df, not checkpoint))
-        while len(frames) > cap:
-            _drop(frames.pop(0))
-        # Global bound across pools: scoped pools are per-invocation,
-        # so without this a long session would accumulate one pool per
-        # query call. Evict oldest-pool-first, never the current one —
-        # an in-flight invocation keeps all its own frames live (the
-        # VERDICT r14 #7 hazard was exactly cross-invocation eviction).
-        while sum(len(v) for v in _POOLS.values()) > _GLOBAL_CAP:
-            victim = next((k for k in _POOLS if k != effective), None)
-            if victim is None:
-                break
-            _drop(_POOLS[victim].pop(0))
-            if not _POOLS[victim]:
-                del _POOLS[victim]
+        _PERSISTED.append(df)
+        while len(_PERSISTED) > _CAP:
+            _PERSISTED.pop(0).unpersist(blocking=False)
     return df
 
 
-def _drop(entry: tuple[DataFrame, bool]) -> None:
-    old, was_persisted = entry
-    if was_persisted:
-        old.unpersist(blocking=False)
-
-
-def clear_pool(pool: str | None = None) -> None:
-    """Unpersist/drop every parked frame in ``pool`` — including its
-    invocation-scoped variants ``pool@scope`` — or in all pools when
-    None; test/bench hygiene, checkpoint block reclaim follows via the
-    ContextCleaner."""
+def clear_pool() -> None:
+    """Unpersist every frame in the FIFO (test and bench hygiene)."""
     with _LOCK:
-        names = (
-            [n for n in _POOLS if n == pool or n.startswith(f"{pool}@")]
-            if pool is not None
-            else list(_POOLS)
-        )
-        for name in names:
-            for entry in _POOLS.pop(name, []):
-                _drop(entry)
+        while _PERSISTED:
+            _PERSISTED.pop().unpersist(blocking=False)

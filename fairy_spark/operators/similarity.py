@@ -17,8 +17,6 @@ results → stable oracle hashes).
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from fairy_spark.operators.skew import spread_width
@@ -26,23 +24,16 @@ from fairy_spark.operators.text import portable_hash64
 from fairy_spark.operators.pool import park_persisted
 
 
-# Final-frame pool for Lloyd centroid builds. INTERMEDIATE rounds are
-# evicted with a build-LOCAL prev handle inside _persist_centroids
-# (safe within one build: the new round's count() fully materializes
-# before the previous frame is dropped); only each build's FINAL
-# frame outlives its build and is parked here, so repeated
-# ivf_index/ivf_mips_topk calls don't accumulate cached k×dim frames
-# until the context cleaner collects them (ADVICE r11). The pool is
-# lock-guarded and keeps the _CENT_POOL_CAP most-recent final frames
-# (ADVICE r12: the old evict-all-on-persist pool let a NEW build drop
-# the centroid frame of an earlier build whose returned DataFrame was
-# still lazy, silently re-triggering that build's full Lloyd loop, and
-# concurrent builds could race the while-pop). Eviction beyond the cap
-# is correctness-safe — Spark recomputes an unpersisted frame on use —
-# it only costs that stale build's Lloyd rerun.
-_CENT_LOCK = threading.Lock()
-_CENT_PERSISTED: list = []
-_CENT_POOL_CAP = 4
+# Lloyd centroid builds: INTERMEDIATE rounds are evicted with a
+# build-LOCAL prev handle inside _persist_centroids (safe within one
+# build: the new round's count() fully materializes before the previous
+# frame is dropped). Only each build's FINAL frame outlives its build;
+# it joins the shared persisted-frame FIFO (operators/pool.py), so
+# repeated ivf_index/ivf_mips_topk calls don't accumulate cached k×dim
+# frames until the context cleaner collects them (ADVICE r11), and a
+# new build never drops an earlier build's still-lazy frame unless the
+# FIFO overflows (ADVICE r12) — which costs that build's Lloyd rerun,
+# never a wrong answer.
 
 
 def _persist_centroids(df: DataFrame, prev: DataFrame | None = None) -> DataFrame:
@@ -55,17 +46,6 @@ def _persist_centroids(df: DataFrame, prev: DataFrame | None = None) -> DataFram
     if prev is not None:
         prev.unpersist(blocking=False)
     return df
-
-
-def _park_final_centroids(df: DataFrame | None) -> None:
-    """Park a build's final persisted centroid frame in the bounded
-    pool (thread-safe); the oldest beyond _CENT_POOL_CAP is evicted."""
-    if df is None:
-        return
-    with _CENT_LOCK:
-        _CENT_PERSISTED.append(df)
-        while len(_CENT_PERSISTED) > _CENT_POOL_CAP:
-            _CENT_PERSISTED.pop(0).unpersist(blocking=False)
 
 
 def _dvec(col: Column) -> Column:
@@ -310,7 +290,8 @@ def ivf_index(
         # lloyd_iters grows).
         cent = _persist_centroids(cent, prev)
         prev = cent
-    _park_final_centroids(prev)
+    if prev is not None:
+        park_persisted(prev)
     assignments = _nearest_centroid(corpus, cent, "_v", n_probe=1).select(
         F.col("_id").alias(id_col), F.col("_v").alias(vec_col), F.col("_cid").alias("cluster")
     )
@@ -620,10 +601,11 @@ def _mips_centroids(corpus: DataFrame, n_clusters: int, lloyd_iters: int) -> Dat
         # Persist each Lloyd round, evicting THIS build's previous one
         # (ADVICE r11: frames must not accumulate until GC; ADVICE r12:
         # eviction is build-local so a new build can't drop a lazy
-        # earlier build's frame — finals go to the bounded pool below).
+        # earlier build's frame — finals go to the shared FIFO below).
         cent = _persist_centroids(cent, prev)
         prev = cent
-    _park_final_centroids(prev)
+    if prev is not None:
+        park_persisted(prev)
     return cent
 
 
@@ -1028,7 +1010,7 @@ def semdedup_summary(
     # degrades to the shuffle join on its own (the _park_degrees
     # argument), so the local broadcast is not a scale trap.
 
-    assigned = park_persisted("semdedup", assigned)
+    assigned = park_persisted(assigned)
     a = assigned.select(
         "cluster",
         F.col("_id").alias("ia"),

@@ -52,19 +52,13 @@ def salted_join(
     return b.join(s, [on, "_salt"], how).drop("_salt")
 
 
-def _parse_bytes(v: str) -> int:
-    """Parse a Spark byte-size conf value ("134217728", "128m", "1g")."""
-    s = v.strip().lower()
-    mult = 1
-    for suf, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("b", 1)):
-        if s.endswith(suf):
-            s = s[: -len(suf)]
-            mult = m
-            break
-    return int(float(s) * mult)
+# Estimated input bytes per task when a frame is smaller than one scan
+# split; measured at sf0.1 (5k docs, 584 KB parquet): shingling width
+# 16 ≈ 0.52 s vs width 32 ≈ 0.59 s vs width 1 ≈ 1.43 s.
+_SPREAD_BYTES = 48 * 1024
 
 
-def spread_width(df: DataFrame, bytes_per_part: int | None = None) -> int | None:
+def spread_width(df: DataFrame) -> int | None:
     """Scale-adaptive partition width for spreading a per-row compute
     pass (Python mapInPandas shingling/hashing, interpreted HOF
     scoring) over a frame that may arrive as a single small scan split.
@@ -73,7 +67,7 @@ def spread_width(df: DataFrame, bytes_per_part: int | None = None) -> int | None
     exactly the local-mode-tuned knob guide §2 warns about. The width
     is derived from the optimizer's size estimate for ``df``:
 
-        width = min(defaultParallelism, ceil(size / bytes_per_part))
+        width = min(defaultParallelism, ceil(size / _SPREAD_BYTES))
 
     and the function returns None (caller skips the repartition
     entirely) when the scan's own estimated split count
@@ -81,38 +75,21 @@ def spread_width(df: DataFrame, bytes_per_part: int | None = None) -> int | None
     width — at 100 TB the scan splits spread the work by themselves
     and a round-robin reshuffle of the whole corpus before the Python
     pass would be pure shuffle cost (guide §2.4 "remove shuffles
-    outright").
-
-    ``bytes_per_part`` (env FAIRY_SPARK_PY_SPREAD_BYTES, default
-    48 KiB of estimated input per task) sizes tasks for inputs smaller
-    than one split; measured at sf0.1 (5k docs, 584 KB parquet):
-    shingling width 16 ≈ 0.52 s vs width 32 ≈ 0.59 s vs width 1 ≈
-    1.43 s. For any estimate the optimizer can't ground (the
+    outright"). For any estimate the optimizer can't ground (the
     8 EiB unknown-stats sentinel), falls back to the legacy
     defaultParallelism width rather than guessing.
     """
-    import os
-
-    sc = df.sparkSession.sparkContext
-    par = sc.defaultParallelism
-    if bytes_per_part is None:
-        bytes_per_part = int(
-            os.environ.get("FAIRY_SPARK_PY_SPREAD_BYTES", str(48 * 1024))
-        )
+    spark = df.sparkSession
+    par = spark.sparkContext.defaultParallelism
     try:
         size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:
         return par
     if size <= 0 or size >= (1 << 60):
         return par
-    width = min(par, max(1, -(-size // bytes_per_part)))
-    try:
-        max_split = _parse_bytes(
-            df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-        )
-    except Exception:
-        max_split = 128 * 1024 * 1024
-    est_splits = max(1, -(-size // max_split))
+    width = min(par, max(1, -(-size // _SPREAD_BYTES)))
+    max_split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    est_splits = -(-size // max_split)
     if est_splits >= width:
         return None
     return width

@@ -24,25 +24,19 @@ DEFAULT_HUB_CAP = 4096
 
 
 def persist_edges(df: DataFrame) -> DataFrame:
-    """Persist an edge frame that feeds several join inputs, parked in
-    the shared bounded pool (operators/pool.py). r14: the old
-    evict-ALL-on-persist list meant a query persisting two frames in
-    sequence (pairs, then the oriented edges derived from them)
-    silently unpersisted the first mid-construction — every branch
-    still referencing it recomputed from scratch, the exact hazard
-    ADVICE r12 flagged for the centroid pool. The bounded pool keeps
-    the most recent frames (cap 4) and evicts only beyond the cap,
-    which is correctness-safe (Spark recomputes unpersisted frames).
+    """Materialize an edge frame that feeds several join inputs, with
+    its lineage cut by an eager ``localCheckpoint``: one evaluation
+    feeds every branch, and the frame lives as long as a plan uses it.
 
-    Checkpoint-mode (lineage cut, NO size statistics) is deliberate
-    for edge frames: they are corpus-shaped, and persist-mode's
+    Checkpoint, not persist (lineage cut, NO size statistics), is
+    deliberate for edge frames: they are corpus-shaped, and persist's
     accurate small-at-sf0.1 statistics made Catalyst broadcast the
     oriented edge list into every wedge join (measured 10 s → 24.5 s
     on graph_triangles_capped) — a plan that also dies at scale, where
     the edge list is TBs. The statistics-less leaf keeps the shuffle
     join plans the hub-capped split is designed around."""
 
-    return park_persisted("wedges", df, checkpoint=True)
+    return df.localCheckpoint(eager=True)
 
 
 def _park_degrees(df: DataFrame) -> DataFrame:
@@ -54,7 +48,7 @@ def _park_degrees(df: DataFrame) -> DataFrame:
     at 100 TB the statistics exceed the broadcast threshold and the
     planner degrades gracefully to the shuffle join on its own."""
 
-    return park_persisted("wedges", df)
+    return park_persisted(df)
 
 
 def orient_edges(pairs: DataFrame, deg: DataFrame | None = None) -> DataFrame:

@@ -146,16 +146,10 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
             # Ship the package to Python workers first: UDF-bearing
             # queries crash with ModuleNotFoundError on any driver
             # whose cwd isn't the repo root otherwise (shipping.py).
-            from fairy_spark.operators.pool import pool_scope
             from fairy_spark.shipping import ensure_package_shipped
 
             ensure_package_shipped(spark)
-            # Per-invocation park scope (VERDICT r14 #7): frames this
-            # builder parks land in pools suffixed with a fresh token,
-            # so interleaved query invocations can't FIFO-evict each
-            # other's materialized frames mid-use.
-            with pool_scope(name):
-                return fn(spark, sf_dir)
+            return fn(spark, sf_dir)
 
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__

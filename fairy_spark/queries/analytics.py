@@ -1261,7 +1261,7 @@ def events_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (small plan, accurate stats) makes every downstream pass read
     # the materialized frame instead.
 
-    rfm = park_persisted("rfm", rfm)
+    rfm = park_persisted(rfm)
     out = rfm
     for metric, qcol in [
         ("recency_days", "r_q"),

@@ -14,23 +14,20 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from fairy_spark.operators.pool import park_persisted
 from fairy_spark.queries import register
 from fairy_spark.sources.tables import load_table
 
 _ITERS = 3
 
-# The graph queries' persisted edge frames: each derives an edge set
-# that feeds 3-7 downstream pipeline consumers (join inputs, degree
-# aggs, anti joins) — without a persist Spark re-derives the whole
-# scan→pair-distinct pipeline once per consumer (graph_triangles:
-# measured 27.7 s → 11.4 s at sf0.1). Cap 1: the previous frame is
-# unpersisted FIRST — the dsir/dedup cache-drop discipline (llm.py
-# _DSIR_PERSISTED): persist-then-unpersist in the other order drops
-# the shared CacheManager entry.
-# The pool lives in operators/wedges.py (extracted in r9 so the
+# The graph queries' materialized edge frames: each derives an edge
+# set that feeds 3-7 downstream pipeline consumers (join inputs,
+# degree aggs, anti joins) — without a boundary Spark re-derives the
+# whole scan→pair-distinct pipeline once per consumer
+# (graph_triangles: measured 27.7 s → 11.4 s at sf0.1). The boundary
+# is operators/wedges.py persist_edges (extracted in r9 so the
 # triangle algorithms run on arbitrary edge lists); this module keeps
 # the private alias for its other edge-frame consumers.
-from fairy_spark.operators.pool import park_persisted
 from fairy_spark.operators.wedges import persist_edges as _persist_edges
 
 
@@ -693,18 +690,17 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _copurchase_pairs(spark, sf_dir)
     # r14: deg feeds du, dv AND the final per-node join — parked so
     # the degree shuffle runs once, not three times. PERSIST-mode
-    # (park_persisted checkpoint=False), not checkpoint: the node-
+    # (park_persisted), not localCheckpoint: the node-
     # sized frame keeps accurate size statistics, so Catalyst's
     # broadcast-vs-shuffle decision stays data-driven (checkpointing
     # it demoted the degree joins BHJ → SMJ and REGRESSED the query
     # 10.6 → 13.0 s; at 100 TB the same statistics push it past the
     # broadcast threshold and the plan degrades gracefully to SMJ).
     deg = park_persisted(
-        "wedges",
         pairs.select(F.col("u").alias("node"))
         .unionAll(pairs.select(F.col("v").alias("node")))
         .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d")),
+        .agg(F.count(F.lit(1)).alias("d"))
     )
     du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
@@ -818,11 +814,10 @@ def graph_clustering_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (statistics preserved) for the same reason as
     # graph_clustering_coeff's deg park.
     deg = park_persisted(
-        "wedges",
         pairs.select(F.col("u").alias("node"))
         .unionAll(pairs.select(F.col("v").alias("node")))
         .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d")),
+        .agg(F.count(F.lit(1)).alias("d"))
     )
     du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
@@ -846,7 +841,6 @@ def graph_clustering_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     # statistics should keep driving the anti/semi joins' broadcast
     # decision.
     hubs = park_persisted(
-        "wedges",
         deg.join(outd.withColumnRenamed("src", "node"), "node", "left")
         .join(ind.withColumnRenamed("dst", "node"), "node", "left")
         .filter(
@@ -1153,7 +1147,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     (eager=True)` materializes each round once and cuts the plan at a
     leaf, making per-round analysis O(1); persist() alone does NOT —
     cache substitution happens after analysis walks the full tree. On
-    a multi-executor cluster the same loop would use a reliable
+    a multi-executor cluster the same loop would use a durable
     `checkpoint()` (HDFS dir) since localCheckpoint blocks are
     unreplicated executor-local.
 

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from fairy_spark.operators.dedup import (
     exact_dedup_stats,
+    hamming_pairs,
     minhash_lsh_candidates,
     simhash,
     simhash64,
@@ -319,7 +320,7 @@ def text_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow batches (_winnow_docs_arrow — the HOF expression tree
     re-inlined the md5 gram transform per zip_with layer and fell back
     to interpreted eval; noop-sink 43 s → ~2 s at sf0.1), and the
-    per-doc frame is parked once (checkpoint) because it feeds THREE
+    per-doc frame is checkpointed once because it feeds THREE
     plan branches: the explode leg (twice — fp counts + the join back)
     and the final per-doc projection. Values byte-identical: the
     builder's identity argument is _py_winnow's docstring, pinned by
@@ -327,9 +328,11 @@ def text_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fairy_spark.operators.dedup import _winnow_docs_arrow
 
     d = load_table(spark, sf_dir, "documents")
-    base = park_persisted(
-        "winnow", _winnow_docs_arrow(d, "doc_id", "text", 4, 4), checkpoint=True
-    ).withColumnRenamed("id", "doc_id")
+    base = (
+        _winnow_docs_arrow(d, "doc_id", "text", 4, 4)
+        .localCheckpoint(eager=True)
+        .withColumnRenamed("id", "doc_id")
+    )
     e = base.select("doc_id", F.explode("fps").alias("fp"))
     counts = e.groupBy("fp").agg(F.count(F.lit(1)).alias("nd"))
     shared = (
@@ -2630,11 +2633,12 @@ def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14 (guide §1.2 step 1): `e` feeds BOTH the per-digest count agg
     # and the join-back, and building it is the expensive part — the
     # CDC chunker is an aggregate() HOF computing one md5 per TOKEN, so
-    # unparked the whole tokenize+chunk+hash pass ran twice (2 parquet
-    # scans of documents in the before-plan). Checkpoint-mode park:
-    # chunk-frame is corpus-shaped — stays out of broadcast plans.
+    # without a boundary the whole tokenize+chunk+hash pass ran twice
+    # (2 parquet scans of documents in the before-plan). Checkpoint,
+    # not persist: the chunk frame is corpus-shaped — stays out of
+    # broadcast plans.
 
-    e = park_persisted("cdc_chunks", e, checkpoint=True)
+    e = e.localCheckpoint(eager=True)
     counts = e.groupBy("dig").agg(F.countDistinct("doc_id").alias("ndocs"))
     dup = F.when(F.col("ndocs") > 1, True)
     return (
@@ -4024,46 +4028,14 @@ def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     geometry (drives bucket collision rates down ~4 orders), plus a
     sink -- not a collect -- for the pair stream."""
     d = load_table(spark, sf_dir, "documents")
-    sig = simhash(d, bits=16)
-    # r14: one checkpoint-mode park of the signature pass — it fed
-    # both self-join sides (computed twice before); the materialized
-    # leaf keeps the banded-join strategy statistics-driven
-    # (simhash64_pairs has the full argument). Measured 6.9 → 4.2 s.
-
-    sig = park_persisted("simhash", sig, checkpoint=True)
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.shiftright("simhash", b * _SIMHASH_BAND_BITS)
-                .bitwiseAND(F.lit((1 << _SIMHASH_BAND_BITS) - 1))
-                .alias("band_val"),
-            )
-            for b in range(_SIMHASH_BANDS)
-        ]
-    )
-    banded = sig.select(
-        "id", "simhash", F.explode(bands).alias("b")
-    ).select("id", "simhash", "b.band_id", "b.band_val")
-    a = banded.alias("a")
-    b = banded.alias("b")
-    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .filter(ham <= _SIMHASH_MAXHAM)
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            ham.cast("int").alias("hamming"),
-        )
-        .distinct()
-        .orderBy("id_a", "id_b")
-    )
+    return hamming_pairs(
+        simhash(d, bits=16),
+        bits=16,
+        n_bands=_SIMHASH_BANDS,
+        max_hamming=_SIMHASH_MAXHAM,
+        id_col="id",
+        hash_col="simhash",
+    ).orderBy("id_a", "id_b")
 
 
 _IMAGE_DHASH_ORACLE = """
@@ -4114,7 +4086,6 @@ def dedup_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle; candidates shuffle on band values only — the minhash-LSH
     shape, so a 100 TB image corpus dedups at Sum|bucket|^2 cost with
     real decode slotting in executor-side."""
-    from fairy_spark.operators.dedup import hamming_pairs
     from fairy_spark.operators.multimodal import (
         image_dhash,
         media_table_from_documents,
@@ -4469,7 +4440,6 @@ def dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     production lever is the same fingerprint-widening documented for
     simhash64/dHash (hamming_pairs takes bits/n_bands as
     parameters)."""
-    from fairy_spark.operators.dedup import hamming_pairs
     from fairy_spark.operators.multimodal import (
         audio_fingerprint,
         media_table_from_documents,
@@ -4537,45 +4507,14 @@ def dedup_simhash_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly representable, which is what makes this row
     hash-checkable)."""
     d = load_table(spark, sf_dir, "documents")
-    sig = simhash(d, bits=_SIMHASH_SCALE_BITS)
-    # r14: same checkpoint-mode park as dedup_simhash_hamming — single
-    # signature evaluation, statistics-driven banded join (see
-    # simhash64_pairs for the measured argument).
-
-    sig = park_persisted("simhash", sig, checkpoint=True)
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.shiftright("simhash", b * _SIMHASH_SCALE_BAND_BITS)
-                .bitwiseAND(F.lit((1 << _SIMHASH_SCALE_BAND_BITS) - 1))
-                .alias("band_val"),
-            )
-            for b in range(_SIMHASH_SCALE_BANDS)
-        ]
-    )
-    banded = sig.select(
-        "id", "simhash", F.explode(bands).alias("b")
-    ).select("id", "simhash", "b.band_id", "b.band_val")
-    a = banded.alias("a")
-    b = banded.alias("b")
-    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .filter(ham <= _SIMHASH_MAXHAM)
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            ham.cast("int").alias("hamming"),
-        )
-        .distinct()
-        .orderBy("id_a", "id_b")
-    )
+    return hamming_pairs(
+        simhash(d, bits=_SIMHASH_SCALE_BITS),
+        bits=_SIMHASH_SCALE_BITS,
+        n_bands=_SIMHASH_SCALE_BANDS,
+        max_hamming=_SIMHASH_MAXHAM,
+        id_col="id",
+        hash_col="simhash",
+    ).orderBy("id_a", "id_b")
 
 
 _SIMHASH64_BAND_BITS = 8
@@ -5487,13 +5426,9 @@ def dedup_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist) keeps the corpus-shaped token frames out of broadcast
     # plans — the pattern's 100 TB shape — while the scan-count drops
     # to the one eager pass each.
-    t = park_persisted(
-        "ppjoin",
-        docs.select(
-            "doc_id", F.array_distinct(tokenize(F.col("text"))).alias("toks")
-        ),
-        checkpoint=True,
-    )
+    t = docs.select(
+        "doc_id", F.array_distinct(tokenize(F.col("text"))).alias("toks")
+    ).localCheckpoint(eager=True)
     tok = t.select("doc_id", F.explode("toks").alias("token"))
     df = tok.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     ordered = (
@@ -5511,11 +5446,9 @@ def dedup_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre = ordered.select(
         "doc_id", n.alias("n"), F.slice("ord", F.lit(1), p).alias("prefix")
     )
-    ptok = park_persisted(
-        "ppjoin",
-        pre.select("doc_id", "n", F.explode("prefix").alias("token")),
-        checkpoint=True,
-    )
+    ptok = pre.select(
+        "doc_id", "n", F.explode("prefix").alias("token")
+    ).localCheckpoint(eager=True)
     a, b = ptok.alias("a"), ptok.alias("b")
     cand = (
         a.join(
@@ -5826,15 +5759,13 @@ def dedup_eval_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # intersect/union rows) on a single core.
     par = spark.sparkContext.defaultParallelism
     s = park_persisted(
-        "evalmh",
-        docs.select("doc_id", shingle_set(F.col("text")).alias("sh")).repartition(par),
+        docs.select("doc_id", shingle_set(F.col("text")).alias("sh")).repartition(par)
     )
     sig = s.withColumn("sig", minhash_signature(F.col("sh"), 8))
     a, b = s.alias("a"), s.alias("b")
     inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
     uni = F.size(F.array_distinct(F.concat(F.col("a.sh"), F.col("b.sh"))))
     exact = park_persisted(
-        "evalmh",
         a.join(F.broadcast(b), F.col("a.doc_id") < F.col("b.doc_id"))
         .filter((F.lit(5) * inter >= F.lit(2) * uni) & (uni > 0))
         .select(F.col("a.doc_id").alias("ida"), F.col("b.doc_id").alias("idb")),
@@ -5844,7 +5775,6 @@ def dedup_eval_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ba, bb = bands.alias("ba"), bands.alias("bb")
     cand = park_persisted(
-        "evalmh",
         ba.join(
             bb,
             (F.col("ba.band") == F.col("bb.band"))

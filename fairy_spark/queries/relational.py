@@ -971,11 +971,9 @@ def kv_persist_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from fairy_spark.kv import KVStore
     from fairy_spark.operators.text import portable_hash64
+    from fairy_spark.queries.sources_io import _IO_ROOT
 
-    loc = os.path.join(
-        os.environ.get("FAIRY_SPARK_IO_DIR", "/tmp/fairy_spark_io"),
-        "kv_persist_probe",
-    )
+    loc = os.path.join(_IO_ROOT, "kv_persist_probe")
     docs = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 100)

@@ -287,6 +287,36 @@ def test_salting_flattens_skewed_shuffle(spark):
     assert salted <= 0.7 * hot, (hot, salted)
 
 
+def test_spread_width_outcomes(spark):
+    """spread_width (operators/skew.py): a frame smaller than one scan
+    split spreads over min(defaultParallelism, ceil(size / 48 KiB))
+    tasks; a frame whose estimated scan splits already reach that width
+    is left alone (None); an unknown size estimate falls back to
+    defaultParallelism."""
+    from fairy_spark.operators import skew
+
+    par = spark.sparkContext.defaultParallelism
+    small = spark.range(12_000)  # 96,000 bytes estimated: 2 parts
+    size = int(small._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    width = skew.spread_width(small)
+    assert width == min(par, -(-size // skew._SPREAD_BYTES))
+    assert 1 < width < par
+    # Spark's own parsed maxPartitionBytes ("1k" = 1024) is read, so
+    # the same frame now arrives as ~94 scan splits: no repartition
+    key = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(key, None)
+    spark.conf.set(key, "1k")
+    try:
+        assert skew.spread_width(small) is None
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
+    unknown = spark.createDataFrame(spark.sparkContext.parallelize([(1,)]), "a INT")
+    assert skew.spread_width(unknown) == par
+
+
 def test_ivf_assignments_partition_prune(spark, sf_dir, tmp_path):
     """SCALE.md contract: the IVF assignments table written
     partitionBy(cluster) serves probes with partition pruning."""

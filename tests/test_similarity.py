@@ -248,27 +248,35 @@ def test_ivf_append_delta_searchable_without_recluster(spark, emb):
     assert out and any(r["neighbor_id"] % 5 == 4 for r in out)
 
 
-def test_ivf_centroid_pool_bounded_across_calls(spark, emb):
+def test_ivf_centroid_pool_bounded_across_calls(spark, emb, monkeypatch):
     # ADVICE r11: repeated IVF builds must not accumulate persisted
-    # Lloyd frames without bound — the module pool keeps at most
-    # _CENT_POOL_CAP final frames. ADVICE r12: within the cap, a new
-    # build must NOT evict an earlier build's final frame (its
-    # returned DataFrame may still be lazy), so the pool grows to the
-    # cap instead of holding exactly one.
+    # Lloyd frames without bound — each build's final frame joins the
+    # shared persisted-frame FIFO (operators/pool.py), which keeps at
+    # most _CAP frames. ADVICE r12: within the cap, a new build must
+    # NOT evict an earlier build's final frame (its returned DataFrame
+    # may still be lazy).
+    from fairy_spark.operators import pool
     from fairy_spark.operators import similarity as S
 
+    monkeypatch.setattr(pool, "_CAP", 4)
     q = emb.filter(F.col("vec_id") <= 3)
-    before = list(S._CENT_PERSISTED)
-    S.ivf_mips_topk(emb, q, k=3, n_clusters=4, n_probe=2).count()
-    first_final = S._CENT_PERSISTED[-1]
-    assert first_final not in before
-    for _ in range(S._CENT_POOL_CAP + 1):
+    try:
+        pool.clear_pool()
         S.ivf_mips_topk(emb, q, k=3, n_clusters=4, n_probe=2).count()
-    assert len(S._CENT_PERSISTED) <= S._CENT_POOL_CAP
-    # cap+1 later builds ran, so the first build's frame was evicted
-    # FIFO — eviction order is oldest-first, never the newest.
-    assert first_final not in S._CENT_PERSISTED
-    assert S._CENT_PERSISTED[-1].storageLevel.useMemory
+        (first_final,) = pool._PERSISTED
+        S.ivf_mips_topk(emb, q, k=3, n_clusters=4, n_probe=2).count()
+        assert len(pool._PERSISTED) == 2
+        assert first_final.storageLevel.useMemory
+        for _ in range(pool._CAP):
+            S.ivf_mips_topk(emb, q, k=3, n_clusters=4, n_probe=2).count()
+        assert len(pool._PERSISTED) == pool._CAP
+        # cap more builds ran, so the first build's frame was evicted
+        # FIFO — eviction order is oldest-first, never the newest.
+        assert first_final not in pool._PERSISTED
+        assert not first_final.storageLevel.useMemory
+        assert pool._PERSISTED[-1].storageLevel.useMemory
+    finally:
+        pool.clear_pool()
 
 
 def test_ivf_delete_empty_tombstones_equals_topk(spark, emb):
