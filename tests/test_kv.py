@@ -248,12 +248,25 @@ def test_random_op_sequences_match_dict_model(kv, spark):
     written: dict[str, int] = {}  # live key -> seq of its latest write
     seq = 0  # the log's max seq, as _alloc_seq sees it
     keys = [f"k{i}" for i in range(6)] + ["", "ключ/ü"]
+    other = KVStore(spark, name="test", num_buckets=8)  # a second writer
     for step in range(40):
-        op = rng(14)
+        op = rng(16)
         k = keys[rng(len(keys))]
         if op < 6:  # put (incl. overwrite)
             v = bytes([rng(256), step % 256])
             kv.put(k, v)
+            seq += 1
+            model[k], written[k] = v, seq
+        elif op == 14:  # put_df with an in-batch duplicate: the last one wins
+            batch = [(k, bytes([rng(256), i, step % 256])) for i in range(2)]
+            batch.insert(1, (keys[rng(len(keys))], bytes([rng(256), 9, step % 256])))
+            kv.put_df(spark.createDataFrame(batch, "key string, value binary"))
+            seq += 1
+            for x, v in batch:
+                model[x], written[x] = v, seq
+        elif op == 15:  # the second handle writes, whatever the fanout
+            v = bytes([rng(256), step % 256, 7])
+            other.put(k, v)
             seq += 1
             model[k], written[k] = v, seq
         elif op < 8:  # delete (missing-key delete still writes a tombstone)
@@ -285,6 +298,8 @@ def test_random_op_sequences_match_dict_model(kv, spark):
             # evict(keep_latest=len(model)) keeps every LIVE key (it
             # drops oldest beyond the count); model unchanged
         written = {x: written[x] for x in model}
+        spark_max = kv._log().agg(F.max("seq")).first()[0] or 0
+        assert kv.current_seq() == spark_max == seq, step
         assert kv._get_spark(keys) == model, step
         assert kv.multi_get(keys) == model, step
         for x in keys:
@@ -544,6 +559,15 @@ def test_non_local_location_takes_the_spark_path(kv, monkeypatch):
     assert kv.get("a") == b"1"
     assert not kv.exists("b")
     assert kv.multi_get(["a", "b", "c"]) == {"a": b"1"}
+    # Writes take the Spark writer too, and current_seq a Spark query.
+    monkeypatch.setattr(kv_mod, "_write_buckets", lambda *a, **k: pytest.fail("direct write"))
+    monkeypatch.setattr(kv_mod.pq, "read_metadata", lambda *a, **k: pytest.fail("footer read"))
+    seq = kv.current_seq()
+    kv.put("c", b"3")
+    kv.delete_batch(["a"])
+    kv.put_df(kv.spark.createDataFrame([("d", b"4")], "key string, value binary"))
+    assert kv.current_seq() == seq + 3
+    assert kv.multi_get(["a", "b", "c", "d"]) == {"c": b"3", "d": b"4"}
 
 
 def test_concurrent_gets_beside_puts_never_stale(kv):
@@ -708,3 +732,124 @@ def test_delete_range_half_open_and_empty_noop(kv):
     assert n == 4  # 003,004,005,006 — end exclusive
     live = {r["key"] for r in kv.scan().collect()}
     assert live == {"000", "001", "002", "007", "008", "009"}
+
+
+def _table_entries(kv) -> list[str]:
+    """Every entry under the table directory, hidden ones included."""
+    import os
+
+    root = kv._listing().path
+    return sorted(
+        os.path.relpath(os.path.join(d, n), root)
+        for d, dirs, files in os.walk(root)
+        for n in dirs + files
+    )
+
+
+def _assert_write_left_nothing(kv, before, write_ids, values, seq) -> None:
+    entries = _table_entries(kv)
+    assert write_ids and not [e for e in entries for w in write_ids if w in e], entries
+    assert entries == before
+    assert kv.current_seq() == seq
+    assert kv.multi_get(list(values)) == values
+    assert kv._get_spark(list(values)) == values
+    assert all(kv.get(k) == v for k, v in values.items())
+
+
+def test_failed_driver_write_leaves_no_file(kv, monkeypatch):
+    """A put_batch that fails after one of its bucket files was written
+    removes every file of that write, hidden or visible: reads, the
+    Spark lookup and current_seq all see the previous state."""
+    import os
+
+    import fairy_spark.kv as kv_mod
+
+    values = {f"key{i}": f"v{i}".encode() for i in range(32)}
+    kv.put_batch(list(values.items()))
+    before, seq = _table_entries(kv), kv.current_seq()
+    real, paths = kv_mod.pq.write_table, []
+
+    def second_fails(table, where, **kw):
+        paths.append(where)
+        if len(paths) == 2:
+            raise OSError("disk full")
+        return real(table, where, **kw)
+
+    monkeypatch.setattr(kv_mod.pq, "write_table", second_fails)
+    with pytest.raises(OSError, match="disk full"):
+        kv.put_batch([(k, b"lost") for k in values])
+    write_ids = {os.path.basename(p).split("-")[2].split("_")[0] for p in paths}
+    _assert_write_left_nothing(kv, before, write_ids, values, seq)
+
+
+def test_failed_put_df_leaves_no_file(kv, spark, monkeypatch):
+    """A put_df whose write tasks fail after staging their bucket files
+    leaves no file of that write behind."""
+    import fairy_spark.kv as kv_mod
+
+    values = {f"key{i}": f"v{i}".encode() for i in range(64)}
+    kv.put_df(spark.createDataFrame(list(values.items()), "key string, value binary"))
+    before, seq = _table_entries(kv), kv.current_seq()
+    real, write_ids = kv_mod._partition_writer, []
+
+    def failing_writer(stage, write_id):
+        write_ids.append(write_id)
+        write = real(stage, write_id)
+
+        def run(batches):
+            staged = list(write(batches))
+            if staged and staged[0].num_rows:
+                raise RuntimeError("task failed after staging its files")
+            yield from staged
+
+        return run
+
+    monkeypatch.setattr(kv_mod, "_partition_writer", failing_writer)
+    with pytest.raises(Exception, match="task failed after staging"):
+        kv.put_df(spark.createDataFrame([(k, b"lost") for k in values], "key string, value binary"))
+    _assert_write_left_nothing(kv, before, write_ids, values, seq)
+
+
+def test_put_df_writes_one_sorted_file_per_bucket(kv, spark, assert_one_bucket_read):
+    """put_df writes at most one file per bucket, every row in the file
+    of its bucket ``pmod(hash(key), n)``, sorted by key."""
+    import os
+    import re
+
+    import pyarrow.parquet as pq
+
+    kv.put_df(
+        spark.createDataFrame([(f"doc-{i}", b"x" * i) for i in range(200)], "key string, value binary")
+    )
+    root = kv._listing().path
+    files = [n for n in os.listdir(root) if not n.startswith((".", "_"))]
+    assert 0 < len(files) <= 8
+    for name in files:
+        keys = pq.read_table(os.path.join(root, name), columns=["key"])["key"].to_pylist()
+        assert keys == sorted(keys), name
+    placed = (
+        spark.read.parquet(root)
+        .select(F.input_file_name().alias("f"), F.pmod(F.hash("key"), F.lit(8)).alias("b"))
+        .collect()
+    )
+    assert len(placed) == 200
+    assert all(int(re.search(r"_(\d+)\.c000", r["f"]).group(1)) == r["b"] for r in placed)
+    assert_one_bucket_read(kv, "doc-7")
+
+
+def test_local_writes_and_current_seq_start_no_spark_job(kv, spark):
+    """On a local store put, put_batch, delete_batch and current_seq
+    run no Spark job, the first write (which creates the table)
+    included."""
+    sc = spark.sparkContext
+    sc.setJobGroup("kv-no-job", "direct writes")
+    try:
+        kv.put("a", b"1")
+        kv.put_batch([("b", b"2"), ("c", b"3")])
+        kv.delete_batch(["a", "zz"])
+        seq = kv.current_seq()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("kv-no-job")) == []
+    assert seq == 3
+    assert kv.multi_get(["a", "b", "c"]) == {"b": b"2", "c": b"3"}
