@@ -359,17 +359,12 @@ def main() -> None:
             ws.append(time.perf_counter() - t0)
         wedge_secs[wname] = round(median(ws), 3)
 
-    # Informational (non-gated, r10): the composed-pipeline pair —
-    # declarative (the oracle anchor) vs the staged parquet boundary
-    # that SCALE.md r10 measured 2.7x faster at sf0.1. One rep each
-    # (minutes-scale queries); tracked per round so the staged win is
-    # a trend, not a one-round observation.
+    # Informational (non-gated, r10): the composed pipeline at the
+    # small-corpus (8,1) and production (16,2) LSH geometries. One rep
+    # each (minutes-scale queries); tracked per round as a trend.
     pipeline_secs: dict[str, float] = {}
     for pname in (
         "pipeline_pretrain_corpus",
-        "pipeline_pretrain_corpus_staged",
-        # r11: the production default (staged + (16,2) geometry) —
-        # the path Engine.pretrain_corpus actually runs
         "pipeline_pretrain_corpus_staged_scale",
     ):
         gc.collect()
@@ -405,9 +400,7 @@ def main() -> None:
                 # non-headline wedge-family trend (VERDICT r8 #7);
                 # + auto-selector overhead (r10)
                 "wedge_secs": wedge_secs,
-                # non-headline composed-pipeline pair (r10): the
-                # staged-boundary win as a per-round trend; + the
-                # staged_scale production default (r11)
+                # non-headline composed-pipeline trend (r10)
                 "pipeline_secs": pipeline_secs,
                 # non-headline winnow best-match trend (VERDICT r10 #5)
                 "winnow_pairs_sec": winnow_sec,

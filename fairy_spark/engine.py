@@ -26,7 +26,6 @@ class Engine:
         self.spark = spark or get_spark(self.cfg)
         self.catalog = Catalog(self.spark)
         self._kv: dict[str, KVStore] = {}
-        self._stage_dirs: list[str] = []
         # make module-referenced UDFs importable on executor workers
         # regardless of the driver process's cwd (shipping.py)
         from fairy_spark.shipping import ensure_package_shipped
@@ -48,74 +47,6 @@ class Engine:
         if name not in self._kv:
             self._kv[name] = KVStore(self.spark, name, num_buckets=self.cfg.kv_num_buckets)
         return self._kv[name]
-
-    def _pipeline_stage_dir(self, docs: DataFrame) -> str:
-        """Default durable stage-boundary path for pretrain_corpus:
-        per-application (two sessions never collide) and per-call (a
-        later call never clobbers a boundary an earlier returned frame
-        still reads from). uuid4-minted, so concurrent threads can
-        never race to the same dir (ADVICE r11: the previous class
-        counter was incremented non-atomically); every minted dir is
-        tracked on this Engine for ``cleanup_stage_dirs``."""
-        import os
-        import uuid
-        from urllib.parse import urlsplit
-
-        from fairy_spark.queries.sources_io import _IO_ROOT
-
-        # Default-minted dirs are cleaned with shutil.rmtree, which
-        # only reaches driver-local POSIX paths — on an HDFS/object-
-        # store _IO_ROOT the cleanup would be a silent no-op (ADVICE
-        # r12), so refuse to mint there: a remote stage root must come
-        # in as an explicit caller-managed ``stage_dir``. ADVICE r13:
-        # parse the scheme properly instead of a '://' substring test —
-        # an hdfs:/ (single-slash) mount is remote despite lacking
-        # '://', and a local dir whose NAME contains '://' is not.
-        _scheme = urlsplit(_IO_ROOT).scheme
-        if len(_scheme) > 1 and _scheme != "file":
-            raise ValueError(
-                f"FAIRY_SPARK_IO_DIR={_IO_ROOT!r} is not a local path; "
-                "pass an explicit stage_dir to pretrain_corpus (caller-"
-                "managed) — default stage dirs must be rmtree-cleanable"
-            )
-        d = os.path.join(
-            _IO_ROOT,
-            docs.sparkSession.sparkContext.applicationId,
-            f"pretrain_stage3_{uuid.uuid4().hex}",
-        )
-        self._stage_dirs.append(d)
-        return d
-
-    def cleanup_stage_dirs(self) -> int:
-        """Remove every stage-boundary dir this Engine minted for
-        staged ``pretrain_corpus`` calls and return how many were
-        ACTUALLY removed (ADVICE r11: long-lived sessions otherwise
-        grow a new stage-3 parquet copy per call with no cleanup
-        path). Call it once the frames returned by those calls are no
-        longer needed — a frame whose boundary dir is removed will
-        fail on its next action. Caller-supplied ``stage_dir``s are
-        the caller's to manage and are not tracked here.
-
-        shutil.rmtree only works on driver-local POSIX paths; if
-        FAIRY_SPARK_IO_DIR points at an HDFS/object-store URI the
-        rmtree is a silent no-op (ADVICE r12), so the return value
-        counts post-rmtree existence checks — a caller seeing fewer
-        removals than mints knows cleanup didn't happen and the dirs
-        are re-queued here rather than dropped from tracking."""
-        import os
-        import shutil
-
-        n = 0
-        survivors: list[str] = []
-        while self._stage_dirs:
-            d = self._stage_dirs.pop()
-            shutil.rmtree(d, ignore_errors=True)
-            if os.path.exists(d):
-                survivors.append(d)  # non-local or undeletable: keep tracking
-            else:
-                n += 1
-        self._stage_dirs.extend(survivors)
-        return n
 
     # -- LLM-data-pipeline surface (operators/*) ------------------------------
 
@@ -282,26 +213,17 @@ class Engine:
         shingle_n: int = 3,
         num_hashes: int = 8,
         band_rows: int = 1,
-        stage_dir: str | None = None,
     ) -> DataFrame:
         """The end-to-end pretraining-corpus pipeline on the caller's
         own documents (operators/pipeline.py; the composition is
         oracle-proven by the registered `pipeline_pretrain_corpus` and,
         at the (16,2) production geometry, by
-        `pipeline_pretrain_corpus_scale` +
         `pipeline_pretrain_corpus_staged_scale`): Gopher quality rules
         -> exact dedup -> minhash near-dup survivor selection -> 8-gram
         decontamination vs probe_docs (skipped when None) -> token
         packing -> deterministic hash split. Returns (id, n_tokens,
-        bin_id, bucket, split).
-
-        ALWAYS STAGED (VERDICT r10 #2): the cleaned corpus is sunk to
-        parquet after stage 3 and re-read — measured 2.7× faster than
-        the declarative chain at sf0.1 (SCALE.md r10: durable beat both
-        lineage re-derivation and in-memory persist at every measured
-        SF) and the restartable shape a multi-TB dedup prefix needs.
-        ``stage_dir`` picks the boundary path (default: a fresh
-        per-call scratch dir).
+        bin_id, bucket, split). The stage-3 output is cut with an eager
+        ``localCheckpoint``; nothing is written to disk.
 
         (shingle_n, num_hashes, band_rows) is the near-dup LSH
         geometry — pass (3, 16, 2) at scale. The probe-gram join
@@ -309,8 +231,6 @@ class Engine:
         decontaminate)."""
         from fairy_spark.operators.pipeline import pretrain_corpus
 
-        if stage_dir is None:
-            stage_dir = self._pipeline_stage_dir(docs)
         return pretrain_corpus(
             docs,
             probe_docs=probe_docs,
@@ -321,7 +241,6 @@ class Engine:
             shingle_n=shingle_n,
             num_hashes=num_hashes,
             band_rows=band_rows,
-            stage_dir=stage_dir,
         )
 
     def triangles(self, pairs: DataFrame, mode: str = "auto") -> DataFrame:

@@ -1,7 +1,7 @@
 """End-to-end pretraining-corpus pipeline over ARBITRARY document
 DataFrames.
 
-The single implementation of the curation chain. The four registered
+The single implementation of the curation chain. The two registered
 `pipeline_pretrain_corpus*` rows (fairy_spark/queries/llm.py) are each
 one call to ``pretrain_corpus`` over the testdata `documents` table
 with the doc_id%97 benchmark stand-in as the probe set; the operator
@@ -27,9 +27,9 @@ stage 4 is a gram-key semi-join (broadcast for benchmark-sized probe
 sets, shuffled for giant ones — size-based by default); stage 5 shards
 the prefix sum; stage 6 is a narrow map. No cartesian products, no
 single-partition windows (asserted registry-wide in tests/test_plans.py
-through the registered query). ``stage_dir`` flips the chain to the
-staged execution shape (parquet boundary after stage 3) for corpora
-where the dedup prefix must be durable.
+through the registered query). The stage-3 output is cut with one
+eager ``localCheckpoint``: stages 4-6 read it from the block manager
+instead of re-deriving the dedup prefix per action.
 """
 
 from __future__ import annotations
@@ -131,7 +131,7 @@ def near_dup_removed(
     the high-recall SMALL-CORPUS setting; at scale pass the measured
     production geometry ``num_hashes=16, band_rows=2`` (SCALE.md "band
     geometry at scale": 94% recall at 7% of the band1 candidate
-    volume), which the registered `pipeline_pretrain_corpus_scale`
+    volume), which the registered `pipeline_pretrain_corpus_staged_scale`
     pins end-to-end against its oracle."""
     from fairy_spark.operators.components import connected_components
     from fairy_spark.operators.dedup import minhash_lsh_candidates
@@ -275,9 +275,8 @@ def _cleaned_corpus(
     num_hashes: int,
     band_rows: int,
 ) -> DataFrame:
-    """Stages 1-3 (quality -> exact dedup -> near-dup survivors) —
-    the prefix both pipeline forms share; its output is the natural
-    checkpoint boundary (everything after is a narrow chain over the
+    """Stages 1-3 (quality -> exact dedup -> near-dup survivors); its
+    output is the natural checkpoint boundary (everything after is a narrow chain over the
     surviving rows only)."""
 
     q1 = gopher_quality_filter(docs, id_col, text_col)
@@ -344,7 +343,6 @@ def pretrain_corpus(
     num_hashes: int = 8,
     band_rows: int = 1,
     decontaminate_broadcast: bool | None = None,
-    stage_dir: str | None = None,
 ) -> DataFrame:
     """The full chain: quality -> exact dedup -> near-dup survivors ->
     decontaminate (skipped when ``probe_docs`` is None) -> pack ->
@@ -356,16 +354,11 @@ def pretrain_corpus(
     (None = size-based; the registered rows pin True, Engine uses
     None).
 
-    ``stage_dir``: when set, the stage-3 output (the cleaned corpus)
-    is SUNK to parquet at that path and re-read before stages 4-6 —
-    the 100 TB execution shape, where the dedup prefix is a multi-TB
-    computation a pipeline wants durable (restartable stage 4+, no
-    re-scan of the raw corpus on a downstream retry) rather than a
-    lineage suffix re-derived per action. Value-identical to the
-    declarative form by construction (the same rows cross the
-    boundary; asserted in tests/test_pipeline_operator.py and pinned
-    against the same oracle by the `_staged` and `_staged_scale`
-    registered rows, which are this call with a stage dir)."""
+    Stage 3's output (the cleaned corpus) is the one boundary: an
+    eager ``localCheckpoint``, because decontaminate reads it twice
+    (gram explode + anti-join) and the packing passes would re-derive
+    the whole dedup prefix per action otherwise. Nothing restarts
+    from it, so it need not be durable."""
 
     q3 = _cleaned_corpus(
         docs,
@@ -376,16 +369,7 @@ def pretrain_corpus(
         shingle_n,
         num_hashes,
         band_rows,
-    )
-    if stage_dir is not None:
-        q3.write.mode("overwrite").parquet(stage_dir)
-        q3 = docs.sparkSession.read.parquet(stage_dir)
-    else:
-        # r14: declarative form gets the same boundary in the block
-        # manager — decontaminate consumes q3 twice (gram explode +
-        # anti-join) and the packing passes re-derive everything
-        # below otherwise.
-        q3 = q3.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     q4 = (
         q3
         if probe_docs is None

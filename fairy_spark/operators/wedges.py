@@ -23,20 +23,12 @@ from fairy_spark.operators.pool import park_persisted
 DEFAULT_HUB_CAP = 4096
 
 
-def persist_edges(df: DataFrame) -> DataFrame:
-    """Materialize an edge frame that feeds several join inputs, with
-    its lineage cut by an eager ``localCheckpoint``: one evaluation
-    feeds every branch, and the frame lives as long as a plan uses it.
-
-    Checkpoint, not persist (lineage cut, NO size statistics), is
-    deliberate for edge frames: they are corpus-shaped, and persist's
-    accurate small-at-sf0.1 statistics made Catalyst broadcast the
-    oriented edge list into every wedge join (measured 10 s → 24.5 s
-    on graph_triangles_capped) — a plan that also dies at scale, where
-    the edge list is TBs. The statistics-less leaf keeps the shuffle
-    join plans the hub-capped split is designed around."""
-
-    return df.localCheckpoint(eager=True)
+# Edge frames that feed several join inputs are cut with an eager
+# ``localCheckpoint``: one evaluation feeds every branch. Checkpoint,
+# not persist: the leaf has NO size statistics, so Catalyst keeps the
+# shuffle joins instead of broadcasting the edge list into every wedge
+# join (persist's small-at-sf0.1 statistics measured 10 s -> 24.5 s on
+# graph_triangles_capped, a plan that also dies at scale).
 
 
 def _park_degrees(df: DataFrame) -> DataFrame:
@@ -109,9 +101,9 @@ def triangle_summary(pairs: DataFrame) -> DataFrame:
     # itself, and the summary's node count — so it re-executed ~5x per
     # query (guide §2.4: remove repeated work outright). One boundary
     # here makes every downstream branch read the store.
-    pairs = persist_edges(pairs)
+    pairs = pairs.localCheckpoint(eager=True)
     deg = _park_degrees(node_degrees(pairs))
-    oriented = persist_edges(orient_edges(pairs, deg))
+    oriented = orient_edges(pairs, deg).localCheckpoint(eager=True)
     return _summary_plain(deg, oriented)
 
 
@@ -126,9 +118,9 @@ def triangle_summary_capped(pairs: DataFrame, cap: int = DEFAULT_HUB_CAP) -> Dat
     triangle has exactly one middle, routed to exactly one pass, so
     the two counts sum to the exact total (role-swapped candidates
     fail the closing-edge check because the orientation is a DAG)."""
-    pairs = persist_edges(pairs)  # r14: see triangle_summary
+    pairs = pairs.localCheckpoint(eager=True)  # r14: see triangle_summary
     deg = _park_degrees(node_degrees(pairs))
-    oriented = persist_edges(orient_edges(pairs, deg))
+    oriented = orient_edges(pairs, deg).localCheckpoint(eager=True)
     return _summary_capped(deg, oriented, cap)
 
 
@@ -215,9 +207,9 @@ def triangle_summary_auto(
     exact, so the choice changes the PLAN, never the triangle total —
     the registered `graph_triangles_auto` oracle mirrors the wedge
     count, the threshold case, and the count itself."""
-    pairs = persist_edges(pairs)  # r14: see triangle_summary
+    pairs = pairs.localCheckpoint(eager=True)  # r14: see triangle_summary
     deg = _park_degrees(node_degrees(pairs))
-    oriented = persist_edges(orient_edges(pairs, deg))
+    oriented = orient_edges(pairs, deg).localCheckpoint(eager=True)
     n_wedges = int(wedge_row_count(oriented).collect()[0]["n_wedges"])
     plan = "capped" if n_wedges > wedge_threshold else "plain"
     if plan == "capped":

@@ -143,9 +143,10 @@ def fn_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def fn_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3 short_hash generalized to content hashing. xxhash64/crc32/
-    F.hash are engine-specific bit-mixes (no cross-engine oracle
-    exists); they're covered by invariant tests in tests/test_functions.py."""
+    """A3 short_hash generalized to content hashing: MD5 and SHA-256
+    hex digests, which both engines compute identically. xxhash64,
+    crc32 and F.hash are engine-specific bit-mixes with no DuckDB
+    counterpart, so this row computes neither."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") <= 50)
     return (
         d.select(

@@ -20,15 +20,11 @@ from fairy_spark.sources.tables import load_table
 
 _ITERS = 3
 
-# The graph queries' materialized edge frames: each derives an edge
-# set that feeds 3-7 downstream pipeline consumers (join inputs,
-# degree aggs, anti joins) — without a boundary Spark re-derives the
-# whole scan→pair-distinct pipeline once per consumer
-# (graph_triangles: measured 27.7 s → 11.4 s at sf0.1). The boundary
-# is operators/wedges.py persist_edges (extracted in r9 so the
-# triangle algorithms run on arbitrary edge lists); this module keeps
-# the private alias for its other edge-frame consumers.
-from fairy_spark.operators.wedges import persist_edges as _persist_edges
+# The graph queries' edge frames each feed 3-7 downstream consumers
+# (join inputs, degree aggs, anti joins); without a boundary Spark
+# re-derives the whole scan→pair-distinct pipeline once per consumer
+# (graph_triangles: measured 27.7 s → 11.4 s at sf0.1). Each is cut
+# with an eager localCheckpoint — why not persist: operators/wedges.py.
 
 
 def _pagerank_oracle(iters: int = _ITERS) -> str:
@@ -425,8 +421,8 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     # pairs feeds the symmetric adjacency (2x), the wedge self-join
-    # reads that twice more, plus the final anti join (_persist_edges).
-    pairs = _persist_edges(pairs)
+    # reads that twice more, plus the final anti join.
+    pairs = pairs.localCheckpoint(eager=True)
     adj = pairs.select(F.col("u").alias("ctr"), F.col("v").alias("nbr")).unionAll(
         pairs.select(F.col("v").alias("ctr"), F.col("u").alias("nbr"))
     )
@@ -515,8 +511,8 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     # pairs feeds the symmetric adjacency (2x), the wedge self-join
-    # reads that twice more, plus the final anti join (_persist_edges).
-    pairs = _persist_edges(pairs)
+    # reads that twice more, plus the final anti join.
+    pairs = pairs.localCheckpoint(eager=True)
     adj = pairs.select(F.col("u").alias("ctr"), F.col("v").alias("nbr")).unionAll(
         pairs.select(F.col("v").alias("ctr"), F.col("u").alias("nbr"))
     )
@@ -628,7 +624,7 @@ def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan held 32 parquet scans)."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     a, b = li.alias("a"), li.alias("b")
-    return _persist_edges(
+    return (
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -636,6 +632,7 @@ def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
         .distinct()
+        .localCheckpoint(eager=True)
     )
 
 
@@ -715,7 +712,7 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
         )
     )
-    oriented = _persist_edges(oriented)
+    oriented = oriented.localCheckpoint(eager=True)
     e1 = oriented.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     e2 = oriented.select(F.col("src").alias("b"), F.col("dst").alias("c"))
     e3 = oriented.select(F.col("src").alias("a"), F.col("dst").alias("c"))
@@ -832,7 +829,7 @@ def graph_clustering_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
         )
     )
-    oriented = _persist_edges(oriented)
+    oriented = oriented.localCheckpoint(eager=True)
     outd = oriented.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
     ind = oriented.groupBy("dst").agg(F.count(F.lit(1)).alias("id_"))
     # r14: hubs feeds the low/hub routing (anti + semi) and the hub
@@ -932,7 +929,7 @@ def graph_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pairs.select(
         F.col("u").alias("src"), F.col("v").alias("dst")
     ).unionAll(pairs.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-    edges = _persist_edges(edges)
+    edges = edges.localCheckpoint(eager=True)
     seeds = (
         pairs.filter(F.col("u") < 3)
         .select(F.col("u").alias("node"))
@@ -1017,7 +1014,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pairs.select(
         F.col("u").alias("src"), F.col("v").alias("dst")
     ).unionAll(pairs.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-    edges = _persist_edges(edges)
+    edges = edges.localCheckpoint(eager=True)
     labels = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )

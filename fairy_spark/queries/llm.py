@@ -3377,7 +3377,7 @@ def pipeline_pretrain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     or a single-partition window — asserted registry-wide in
     tests/test_plans.py, which is the gate VERDICT r8 #5 names.
 
-    All four pipeline rows are one call to
+    Both pipeline rows are one call to
     operators/pipeline.py pretrain_corpus. The probe rows take part in
     stages 1-3 like any other doc; stage 4 then drops them with the
     rest of the contaminated docs (a probe row that survives Gopher
@@ -3395,79 +3395,22 @@ def pipeline_pretrain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-@register("pipeline_pretrain_corpus_scale", oracle=_pipeline_oracle(16, 2))
-def pipeline_pretrain_corpus_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The composed pipeline AT THE PRODUCTION GEOMETRY (VERDICT r9
-    #1): identical six-stage chain to `pipeline_pretrain_corpus`, but
-    stage 3 runs the measured (num_hashes=16, band_rows=2) scale
-    setting — 8 two-row bands, per-band collision prob J², the
-    geometry SCALE.md measured at 27× candidate suppression vs the
-    (8,1) small-corpus default (94% recall at 7% of band1 volume on
-    the 80k synth corpus). The 100 TB artifact is THIS composition:
-    a user cleaning a real corpus copies the scale geometry, so the
-    oracle proves the composition at that setting too — the SQL
-    mirrors the 16-component signature and the 8 two-component band
-    conjunctions literally, then the identical stages 4-6. Geometry
-    flows through operators/pipeline.py near_dup_removed's (shingle_n,
-    num_hashes, band_rows) params — the same user-facing knobs
-    Engine.pretrain_corpus exposes."""
-    d = load_table(spark, sf_dir, "documents")
-    return pretrain_corpus(
-        d.select("doc_id", "text", "n_chars"),
-        probe_docs=d.filter(F.col("doc_id") % 97 == 0),
-        num_hashes=16,
-        band_rows=2,
-        decontaminate_broadcast=True,
-    ).orderBy("doc_id")
-
-
-@register("pipeline_pretrain_corpus_staged", oracle=_PIPELINE_ORACLE)
-def pipeline_pretrain_corpus_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The composed pipeline WITH THE DURABLE STAGE BOUNDARY (VERDICT
-    r9 #3): identical chain and oracle to `pipeline_pretrain_corpus`,
-    but the stage-3 output (the cleaned corpus) is SUNK to parquet and
-    re-read before stages 4-6 — the execution shape a 100 TB run
-    wants, where the dedup prefix is a multi-TB computation that must
-    be durable (downstream retries restart from the boundary instead
-    of re-scanning the raw corpus, and the packing/split suffix stops
-    re-deriving the whole lineage per action). Checking it against the
-    SAME oracle proves the flip is value-identical: the same rows
-    cross the parquet boundary that cross the lineage edge in the
-    declarative form. At sf0.1 the boundary costs one extra write+read
-    of a few-MB frame (scheduler-bound, measured in SCALE.md r10);
-    the crossover argument is the same one persisted stage caching
-    lost at this SF — the boundary pays for itself when the prefix is
-    expensive relative to a parquet round-trip."""
-    from fairy_spark.queries.sources_io import _scratch
-
-    d = load_table(spark, sf_dir, "documents")
-    return pretrain_corpus(
-        d.select("doc_id", "text", "n_chars"),
-        probe_docs=d.filter(F.col("doc_id") % 97 == 0),
-        num_hashes=8,
-        band_rows=1,
-        decontaminate_broadcast=True,
-        stage_dir=_scratch(spark, sf_dir, "pipeline_stage3"),
-    ).orderBy("doc_id")
-
-
 @register("pipeline_pretrain_corpus_staged_scale", oracle=_pipeline_oracle(16, 2))
 def pipeline_pretrain_corpus_staged_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """THE PRODUCTION CONFIGURATION (VERDICT r10 #2): the composed
-    pipeline with BOTH production choices at once — the measured
-    (num_hashes=16, band_rows=2) LSH scale geometry (27× candidate
-    suppression, 94% recall; SCALE.md) AND the durable stage-3 parquet
-    boundary (measured 2.7× faster than the declarative chain at
-    sf0.1, and the restartable execution shape a multi-TB dedup prefix
-    needs). This is what `Engine.pretrain_corpus` always runs
-    (geometry caller-chosen) — so the default path
-    a user actually executes is itself oracle-pinned: checked against
-    the SAME (16,2) oracle as `pipeline_pretrain_corpus_scale`, which
-    proves the boundary flip value-identical at the production
-    geometry, not just at the (8,1) small-corpus setting
-    `pipeline_pretrain_corpus_staged` pins."""
-    from fairy_spark.queries.sources_io import _scratch
+    """The composed pipeline AT THE PRODUCTION GEOMETRY: the six-stage
+    chain of `pipeline_pretrain_corpus`, with stage 3 at the measured
+    (num_hashes=16, band_rows=2) scale setting — 8 two-row bands,
+    per-band collision prob J², 27× candidate suppression vs the (8,1)
+    small-corpus default at 94% recall (SCALE.md "band geometry at
+    scale"). The oracle mirrors the 16-component signature and the 8
+    two-component band conjunctions literally, then the same stages
+    4-6, so the composition a user runs at scale through
+    Engine.pretrain_corpus is itself oracle-pinned.
 
+    "staged" names the stage-3 boundary, which is now the in-memory
+    ``localCheckpoint`` every ``pretrain_corpus`` call takes (the
+    parquet stage write is gone). The row keeps its name because
+    perfbench/corpus_curate.py selects it by name."""
     d = load_table(spark, sf_dir, "documents")
     return pretrain_corpus(
         d.select("doc_id", "text", "n_chars"),
@@ -3475,7 +3418,6 @@ def pipeline_pretrain_corpus_staged_scale(spark: SparkSession, sf_dir: str) -> D
         num_hashes=16,
         band_rows=2,
         decontaminate_broadcast=True,
-        stage_dir=_scratch(spark, sf_dir, "pipeline_stage3_scale"),
     ).orderBy("doc_id")
 
 

@@ -173,59 +173,6 @@ def test_pretrain_corpus_facade_matches_production_row(engine, spark, sf_dir):
     assert got and got == reg
 
 
-def test_pretrain_corpus_staged_default_matches_lineage_form(engine, spark, sf_dir):
-    """VERDICT r10 #2: the facade always stages (a durable parquet
-    boundary after stage 3); consecutive calls get distinct boundary
-    dirs (no clobber). Staged == lineage values are pinned by
-    test_pipeline_operator.py and the `_scale`/`_staged_scale` oracle
-    pair."""
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    assert engine.pretrain_corpus(docs).collect()
-    d1 = engine._pipeline_stage_dir(docs)
-    d2 = engine._pipeline_stage_dir(docs)
-    assert d1 != d2
-
-
-def test_pretrain_corpus_stage_dir_guard_and_cleanup(engine, spark, sf_dir):
-    """ADVICE r11: cleanup_stage_dirs removes every facade-minted
-    boundary dir."""
-    import os
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    engine.cleanup_stage_dirs()  # drop dirs left by earlier tests
-    engine.pretrain_corpus(docs).count()
-    assert len(engine._stage_dirs) == 1
-    minted = engine._stage_dirs[0]
-    assert os.path.isdir(minted)
-    assert engine.cleanup_stage_dirs() == 1
-    assert not os.path.exists(minted) and engine._stage_dirs == []
-
-
-def test_stage_dir_cleanup_counts_only_real_removals(engine, spark, sf_dir, monkeypatch):
-    """ADVICE r12: cleanup_stage_dirs must report what it actually
-    removed — a no-op rmtree (non-local filesystem, undeletable dir)
-    returns 0 and KEEPS the dir tracked instead of silently dropping
-    it; a URI-schemed _IO_ROOT refuses to mint default stage dirs at
-    all (rmtree can't reach it)."""
-    import os
-    import shutil as _shutil
-
-    from fairy_spark.queries import sources_io
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    engine.cleanup_stage_dirs()  # drop dirs left by earlier tests
-    engine.pretrain_corpus(docs).count()
-    minted = engine._stage_dirs[0]
-    monkeypatch.setattr(_shutil, "rmtree", lambda *a, **k: None)
-    assert engine.cleanup_stage_dirs() == 0
-    assert engine._stage_dirs == [minted] and os.path.isdir(minted)
-    monkeypatch.undo()
-    assert engine.cleanup_stage_dirs() == 1 and not os.path.exists(minted)
-    monkeypatch.setattr(sources_io, "_IO_ROOT", "hdfs://nn/fairy_io")
-    with pytest.raises(ValueError, match="not a local path"):
-        engine._pipeline_stage_dir(docs)
-
-
 def test_langid_through_engine(engine, spark):
     docs = spark.createDataFrame(
         [
